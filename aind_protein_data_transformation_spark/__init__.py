@@ -16,7 +16,6 @@ Layout:
 - ``sources``   — non-parquet sources (binary-file chunk decode, ...).
 - ``streaming`` — Structured Streaming surface over the events table.
 - ``measure``   — shared interleaved order-alternated A/B harness.
-- ``calibrate`` — HOF-vs-kernel dispatch crossover self-calibration.
 """
 
 __version__ = "0.1.0"

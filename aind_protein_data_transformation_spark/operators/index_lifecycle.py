@@ -476,12 +476,11 @@ def swap_index(spark, name: str, target: str, spec: IndexSpec, verify_fn=None) -
     also moves the warehouse directory, which on an S3-class object
     store is a per-object copy-and-delete — neither atomic nor O(1).
     The ``path=`` external form is therefore not just a nicety but the
-    REQUIRED shape at an object-store deployment (same boundary as
-    ``compact_clustered_table``: its ``swap="rename"`` regime assumes
-    POSIX/HDFS atomic rename, and ``swap="manifest"`` — pointer
-    indirection over immutable versioned units — is the object-store
-    form; an external-table catalog rename is the catalog's version of
-    that same pointer update).
+    REQUIRED shape at an object-store deployment (the path-based
+    stores avoid the boundary differently: ``compact_clustered_table``
+    commits a new versioned unit with one small record PUT and never
+    renames; an external-table catalog rename is the catalog's version
+    of that metadata-only commit).
 
     Returns ``{"status": "swapped" | "resumed", "dropped": [...]}``,
     where ``dropped`` lists the retired tables phase 3 actually deleted

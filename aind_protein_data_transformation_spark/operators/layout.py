@@ -38,6 +38,24 @@ reads only parquet FOOTERS (pyarrow, driver-side metadata) and counts
 row groups whose per-column [min, max] intersect a predicate box —
 exactly the keep/skip decision Spark's parquet reader makes from the
 pushed filters, with zero timing noise.
+
+Storage protocol. Both path-based stores — a clustered table and a
+batch-keyed ingest lake — answer "which files are live" one way, so it
+holds on S3-class stores where a directory rename is a per-object copy:
+
+- A unit is a directory a compact writes once: a table's
+  ``_versions/v_NNNNNN`` or a lake's folded ``batch=c<lo>-<hi>``.
+- A unit is live only after its ``_COMMITTED`` record is created,
+  after every data object. The record is created once and never
+  overwritten; nothing is ever renamed to commit.
+- A table's live unit is its highest committed version (the root
+  itself until the first compact). A lake's live units are its
+  committed units that no other committed unit's span contains.
+- Both compacts run vacuum → write the new unit → multiset-verify →
+  create the record, and keep the replaced generation until the next
+  compact or an explicit :func:`vacuum_units`.
+
+Readers go through :func:`resolve_units` / :func:`read_units`.
 """
 
 from __future__ import annotations
@@ -63,15 +81,12 @@ __all__ = [
     "zorder_layout",
     "hilbert_from_morton",
     "compact_clustered_table",
-    "vacuum_clustered_table",
     "compact_ingest_units",
-    "repair_ingest_units",
-    "resolve_ingest_units",
-    "read_ingest_lake",
+    "resolve_units",
+    "read_units",
+    "vacuum_units",
     "save_edge_snapshot",
     "load_edge_snapshot",
-    "resolve_clustered_table",
-    "read_clustered_table",
     "layout_scan_fraction",
 ]
 
@@ -527,6 +542,9 @@ def zorder_layout(
     BENCH.md round 12). This is what makes the layout viable at 100 TB:
     cluster each arriving batch, never re-shuffle history — the same
     never-re-scan-history rule as the incremental LSH index families.
+    On a compacted table the batch lands in the live unit
+    :func:`resolve_units` names, so resolved readers see it; files
+    already written are never rewritten.
 
     ``edges=`` accepts the bin edges a previous call returned: the
     sketch pass is skipped (one fewer full read of the batch — at
@@ -544,7 +562,7 @@ def zorder_layout(
     directory must use a HIDDEN name (underscore/dot-prefixed, e.g.
     ``_edges.json`` — the ``_delta_log`` convention): Spark's listing
     skips hidden entries, so readers don't try to parse it as parquet,
-    and the manifest compact's stale-data sweep (which removes only
+    and the first compact's root sweep (which removes only
     ``*.parquet`` entries) leaves it alone either way.
     """
     cols = list(cols)
@@ -558,11 +576,11 @@ def zorder_layout(
             "key would silently replace it and the stored schema would "
             "no longer be the input schema; rename it first"
         )
-    # A manifest-compacted table's live unit is a versioned directory
-    # under <path>/_versions — route the write there, so appends after
-    # a swap="manifest" compact stay visible to resolved readers
-    # instead of landing invisibly in the root.
-    out_path = resolve_clustered_table(out_path, spark=df.sparkSession)
+    if mode == "append":
+        # a compacted table's live unit is its newest committed version
+        # under <path>/_versions — appends land there so resolved
+        # readers see them (an overwrite replaces the whole table)
+        (out_path,) = resolve_units(out_path, spark=df.sparkSession)
     if bits is None:
         if edges is not None:
             # smallest width whose 2^bits - 1 bins fit the provided
@@ -625,41 +643,17 @@ def zorder_layout(
 
 
 #: Hidden (underscore-prefixed, so Spark's file listing skips it)
-#: subdirectory holding the manifest regime's versioned units + pointer.
+#: subdirectory holding a compacted table's versioned units.
 _VERSIONS_DIR = "_versions"
-_CURRENT_POINTER = "_CURRENT"
 #: Hidden sidecar name for the persisted bin-edge snapshot (the
 #: ``_delta_log`` naming convention: Spark's listing skips it, and the
-#: manifest compact's stale-data sweep removes only ``*.parquet``).
+#: compact's root sweep removes only ``*.parquet``).
 _EDGES_SIDECAR = "_edges.json"
-#: Commit marker written INSIDE a folded ingest unit, strictly after
-#: every data object: a ``batch=c<lo>-<hi>`` unit is live only once
-#: this file exists, making the fold's commit point one small PUT even
-#: on stores whose directory rename is a non-atomic per-object copy.
-#: Underscore-prefixed, so Spark's parquet listing and the footer-
-#: geometry walk both skip it.
-_FOLD_MARKER = "_FOLD_COMMITTED"
-
-
-def _write_small_file(full_path: str, payload: str, spark=None) -> None:
-    """One small-file overwrite, scheme-dispatched: write-tmp +
-    ``os.replace`` locally (atomic on POSIX), a single-object
-    ``create(overwrite)`` through the Hadoop FileSystem elsewhere
-    (atomic per object on S3-class stores)."""
-    if _use_local_fs(full_path, spark):
-        local = _strip_file_scheme(full_path)
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        tmp = local + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(payload)
-        os.replace(tmp, local)
-        return
-    fs, jp = _hadoop_fs(spark, full_path)
-    stream = fs.create(jp, True)
-    try:
-        stream.write(bytearray(payload.encode("utf-8")))
-    finally:
-        stream.close()
+#: The commit record: created once INSIDE a unit, strictly after every
+#: data object, and never overwritten. A unit that needs a record and
+#: lacks one does not exist for readers. Underscore-prefixed, so
+#: Spark's parquet listing and the footer-geometry walk both skip it.
+_COMMIT_RECORD = "_COMMITTED"
 
 
 def _exists(path: str, spark=None) -> bool:
@@ -683,14 +677,26 @@ def save_edge_snapshot(
     (``quantile_bin_edges`` numeric-izes dates/strings before
     sketching), so plain JSON round-trips them exactly. Atomic on local
     filesystems (write-tmp + replace), single-object overwrite through
-    the Hadoop FileSystem elsewhere — same dispatch as the manifest
-    pointer. The sidecar lives at the table ROOT (not inside a
-    versioned unit), so it survives every manifest compact — pinned in
+    the Hadoop FileSystem elsewhere. The sidecar lives at the store
+    ROOT (not inside a unit), so it survives every compact — pinned in
     tests/test_layout.py's sidecar-sweep test."""
     import json
 
     sidecar = os.path.join(path, _EDGES_SIDECAR)
-    _write_small_file(sidecar, json.dumps(edges, sort_keys=True), spark)
+    payload = json.dumps(edges, sort_keys=True)
+    if _use_local_fs(sidecar, spark):
+        local = _strip_file_scheme(sidecar)
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        with open(local + ".tmp", "w") as f:
+            f.write(payload)
+        os.replace(local + ".tmp", local)
+        return
+    fs, jp = _hadoop_fs(spark, sidecar)
+    stream = fs.create(jp, True)
+    try:
+        stream.write(bytearray(payload.encode("utf-8")))
+    finally:
+        stream.close()
 
 
 def load_edge_snapshot(
@@ -720,45 +726,6 @@ def load_edge_snapshot(
         stream.close()
 
 
-def resolve_clustered_table(path: str, spark=None) -> str:
-    """Resolve the LIVE data directory of a clustered table.
-
-    Tables compacted with ``swap="manifest"`` keep their data in
-    versioned units under ``<path>/_versions/`` with a small
-    ``_CURRENT`` pointer file naming the live one (the Delta/Iceberg
-    commit shape: retired units are immutable, only the pointer
-    changes; the LIVE unit still accepts appends —
-    :func:`zorder_layout` routes them there). Tables never
-    manifest-compacted resolve to ``path`` itself. Readers in the
-    manifest regime must go through this helper (or
-    :func:`read_clustered_table`); a raw ``spark.read.parquet(path)``
-    on a manifest table fails loudly (the root holds no data files —
-    only the hidden ``_versions`` dir plus any non-data sidecars the
-    caller keeps there) rather than returning stale data.
-
-    Pass ``spark`` to resolve non-local paths: the pointer is then
-    read through the Hadoop FileSystem for the path's scheme (one
-    small-object GET). A session is REQUIRED for a remote-scheme path —
-    resolving one without a session raises ``ValueError`` (never a
-    silent flat-path fallback that would miss the manifest).
-
-    Reader-vs-cleanup boundary: a resolved versioned unit stays
-    readable across the NEXT :func:`compact_clustered_table` — its
-    cleanup keeps the ``keep_versions`` (default 1) most recently
-    retired units precisely so a scan that resolved just before the
-    pointer commit can finish. A reader that outlives more compacts
-    than that (or an explicit :func:`vacuum_clustered_table`) loses
-    its files LOUDLY mid-scan — re-resolve and retry; never silently
-    wrong data. (Readers of a not-yet-converted FLAT table get no such
-    grace across the first compact — see the eager flat-sweep note in
-    the compact docstring.)
-    """
-    version = _read_pointer(path, spark)
-    if version is not None:
-        return os.path.join(path, _VERSIONS_DIR, version)
-    return path
-
-
 def _path_scheme(path: str) -> str | None:
     """URI scheme of ``path`` (``file``, ``s3a``, ``hdfs``, ...), or
     None for a scheme-less path."""
@@ -769,22 +736,22 @@ def _path_scheme(path: str) -> str | None:
 
 
 def _use_local_fs(path: str, spark) -> bool:
-    """Dispatch the pointer protocol on the path's SCHEME, never by
+    """Dispatch every storage operation on the path's SCHEME, never by
     probing the driver's local disk: when the session's default FS is
     remote (HDFS/S3), a same-named directory that happens to exist on
-    the driver's local disk must NOT capture the pointer read/commit —
-    that would resolve the manifest against the wrong filesystem and
-    silently see no manifest. Scheme-less paths follow
-    ``fs.defaultFS`` (the same rule Spark itself applies); an explicit
-    ``file:`` URI goes through the Hadoop FileSystem when a session is
-    available (same bytes, and it keeps the Hadoop branch exercised by
-    the local twin tests), plain Python I/O otherwise.
+    the driver's local disk must NOT capture a listing or a commit-record
+    probe — that would resolve the store against the wrong filesystem.
+    Scheme-less paths follow ``fs.defaultFS`` (the same rule Spark
+    itself applies); an explicit ``file:`` URI goes through the Hadoop
+    FileSystem when a session is available (same bytes, and it keeps
+    the Hadoop branch exercised by the local twin tests), plain Python
+    I/O otherwise.
 
     A remote-scheme path with NO session raises immediately: the only
     way to reach that filesystem is through the session's Hadoop
     FileSystem, and falling through would crash later with an opaque
     AttributeError inside :func:`_hadoop_fs` (or, worse for a reader,
-    look like "no pointer here")."""
+    look like an empty store)."""
     scheme = _path_scheme(path)
     if scheme is None:
         if spark is None:
@@ -814,68 +781,9 @@ def _strip_file_scheme(path: str) -> str:
     return path
 
 
-def _read_pointer(path: str, spark=None) -> str | None:
-    """The manifest pointer's content (live version name), or None for
-    a flat/never-compacted table. Scheme-dispatched: local Python I/O
-    for local paths, the Hadoop FileSystem for everything else (see
-    :func:`_use_local_fs`).
-
-    A BLANK pointer reads as None, never as an empty version name: an
-    empty ``_CURRENT`` is a mid-commit or crashed-commit state, and an
-    empty version would make :func:`resolve_clustered_table` return
-    ``<path>/_versions/`` — the union of EVERY unit (silent duplicate
-    rows). None instead resolves to the (empty) root, so every
-    downstream read fails loudly."""
-    pointer = os.path.join(path, _VERSIONS_DIR, _CURRENT_POINTER)
-    version = None
-    if _use_local_fs(path, spark):
-        local = _strip_file_scheme(pointer)
-        if os.path.isfile(local):
-            with open(local) as f:
-                version = f.read().strip()
-    else:
-        fs, jpointer = _hadoop_fs(spark, pointer)
-        if fs.exists(jpointer):
-            stream = fs.open(jpointer)
-            try:
-                version = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                ).strip()
-            finally:
-                stream.close()
-    return version or None
-
-
-def _commit_pointer(versions_root: str, version: str, spark) -> None:
-    """Make ``version`` the live unit via one small-file update. Local
-    filesystems: write-tmp + ``os.replace`` (atomic on POSIX, no
-    partial or empty state ever visible). Non-local schemes: a
-    single-object overwrite through the Hadoop FileSystem — on
-    S3-class stores one small PUT, atomic per object (readers see the
-    old or the new pointer, never a partial one). On HDFS,
-    create(overwrite) is NOT a single atomic PUT: a reader racing the
-    commit can observe an empty or partial ``_CURRENT`` — which
-    :func:`_read_pointer`'s blank-as-None rule and the
-    nonexistent-unit read turn into a LOUD transient failure (retry),
-    never a silent multi-unit read."""
-    pointer = os.path.join(versions_root, _CURRENT_POINTER)
-    if _use_local_fs(versions_root, spark):
-        local = _strip_file_scheme(pointer)
-        tmp_pointer = local + ".tmp"
-        with open(tmp_pointer, "w") as f:
-            f.write(version)
-        os.replace(tmp_pointer, local)
-        return
-    fs, jpointer = _hadoop_fs(spark, pointer)
-    stream = fs.create(jpointer, True)
-    try:
-        stream.write(bytearray(version.encode("utf-8")))
-    finally:
-        stream.close()
-
-
 def _delete_tree(p: str, spark) -> None:
-    """Best-effort recursive delete, scheme-portable."""
+    """Best-effort recursive delete, scheme-portable. Callers that
+    report a delete confirm it with :func:`_exists` afterwards."""
     if _use_local_fs(p, spark):
         import shutil
 
@@ -891,7 +799,7 @@ def _delete_tree(p: str, spark) -> None:
     try:
         _hadoop_delete(spark, p)
     except Exception:
-        pass  # best-effort: an unreferenced unit is inert garbage
+        pass  # best-effort: a dead unit is inert garbage
 
 
 def _list_entries(path: str, spark) -> list[str]:
@@ -905,242 +813,41 @@ def _list_entries(path: str, spark) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(jp)]
 
 
-def read_clustered_table(spark, path: str) -> DataFrame:
-    """``spark.read.parquet`` through :func:`resolve_clustered_table`."""
-    return spark.read.parquet(resolve_clustered_table(path, spark=spark))
-
-
-def compact_clustered_table(
-    df_or_path,
-    cols: Sequence[str],
-    bits: int | None = None,
-    num_files: int | None = None,
-    row_group_bytes: int | None = None,
-    compression: str = "zstd",
-    curve: str = "morton",
-    spark=None,
-    swap: str = "rename",
-    keep_versions: int = 1,
-) -> dict[str, list[float]]:
-    """Re-cluster an incrementally-appended table back to the global
-    bound, verify, then swap — the table-level twin of the index
-    lifecycles' compact step.
-
-    ``mode="append"`` ingestion pins the kept fraction at the
-    per-BATCH tiling bound (measured: 0.270 ten-batch incremental vs
-    0.132 global at the ×10 layout — BENCH.md round 12); compaction
-    recovers the global bound by re-clustering the merged unit once.
-    Two swap regimes, both verify-then-promote (a full-row multiset
-    fingerprint must match the live table BEFORE anything is promoted
-    — a compact must never lose, duplicate, or re-type a row):
-
-    ``swap="rename"`` (the filesystem fast path) mirrors
-    ``swap_*_index``: the re-cluster lands in a sibling
-    ``<path>.compact`` directory, then two directory renames promote
-    it (live → ``<path>.retired``, compact → live) and the retired
-    directory is removed last. A crash between the renames leaves
-    either the verified old or the verified new directory under a
-    recoverable name — never a half-written live table. **Boundary:
-    this regime assumes atomic, O(1) directory rename — true on POSIX
-    and HDFS, FALSE on S3-class object stores, where a directory
-    rename is a per-object copy-and-delete (non-atomic AND O(data)).
-    At an object-store deployment use** ``swap="manifest"``.
-
-    ``swap="manifest"`` is the object-store-safe form (the
-    Delta/Iceberg commit shape): the re-cluster lands in an immutable
-    versioned unit ``<path>/_versions/v_NNNNNN`` (underscore-prefixed,
-    so Spark's listing never sees it as data), and promotion is ONE
-    small-file update of ``<path>/_versions/_CURRENT`` — write-tmp +
-    ``os.replace`` on local filesystems (atomic on POSIX), a
-    single-object overwrite through the Hadoop FileSystem on non-local
-    schemes (on S3-class stores one small PUT, atomic per object); the
-    big data directories are never renamed at all, so promotion stays
-    O(1) where directory rename is O(data). Readers resolve through
-    :func:`resolve_clustered_table`. Crash points: before the pointer
-    commit the live table is untouched and the half-built version dir
-    is overwritten by the retried compact (the version number is
-    recomputed from the pointer); after the commit the new unit is
-    live and everything the pointer doesn't name — prior units, stale
-    flat files in the root — is unreferenced garbage, removed
-    best-effort last AND re-swept by every later compact, so a crash
-    inside the cleanup window costs temporary storage, never
-    correctness.
-
-    **Reader retention window** (``keep_versions``, manifest regime
-    only): cleanup keeps the ``keep_versions`` most recently RETIRED
-    versioned units (default 1 — the immediately-previous unit), so a
-    reader that resolved the old pointer just before the commit can
-    finish its scan — the same retired-snapshot grace Delta/Iceberg
-    give in-flight readers, with :func:`vacuum_clustered_table` as the
-    separate explicit vacuum. The boundary: a reader is safe while its
-    resolved unit is within the newest ``keep_versions`` retired
-    units — with the default, any scan that outlives ONE further
-    compact loses its files (loudly, mid-collect — never silently
-    wrong). Two deliberate edges: ``keep_versions=0`` restores eager
-    cleanup for single-runner deployments that never overlap reads
-    with compacts, and the FIRST compact's sweep of the pre-manifest
-    flat root files is always eager regardless — the blank-pointer
-    hardening requires the root to hold no data (a crashed commit
-    resolves there and must fail loudly, never serve a stale flat
-    copy), so readers of the not-yet-converted flat state get no
-    grace; convert during a quiet window.
-
-    Accepts a path (str); ``spark`` is required then. ``bits=None``
-    law-sizes the re-clustered geometry (see :func:`zorder_layout`).
-    At 100 TB you compact the k oldest batches into one unit on
-    whatever cadence the measured incremental-vs-global gap justifies
-    — the same amortization argument as the LSH index compaction.
-    """
-    import shutil
-
-    if not isinstance(df_or_path, str):
-        raise ValueError(
-            "compact_clustered_table takes the table PATH (the swap "
-            "renames directories; a DataFrame has no directory)"
-        )
-    if swap not in ("rename", "manifest"):
-        raise ValueError(f"unknown swap regime {swap!r}; rename or manifest")
-    path = df_or_path
-    if spark is None:
-        raise ValueError("spark session required when passing a path")
-    # ONE pointer read feeds both the live snapshot and (in the
-    # manifest branch) the next version number — two reads could
-    # straddle a concurrent commit and number the new unit against a
-    # different state than the one fingerprint-verified
-    current = _read_pointer(path, spark)
-    live_dir = (os.path.join(path, _VERSIONS_DIR, current)
-                if current else path)
-    live = spark.read.parquet(live_dir)
-
-    def _recluster_and_verify(target: str, untouched: str):
-        # shared by both regimes: one re-cluster into ``target``, then
-        # the fingerprint gate BEFORE anything is promoted
-        edges = zorder_layout(
-            live, cols, target, bits=bits, num_files=num_files,
-            row_group_bytes=row_group_bytes, compression=compression,
-            curve=curve,
-        )
-        if (_multiset_fingerprint(spark.read.parquet(target))
-                != _multiset_fingerprint(live)):
-            raise RuntimeError(
-                f"compact of {path} changed the row multiset; {target} "
-                f"kept for inspection, {untouched} untouched"
-            )
-        return edges
-
-    if swap == "manifest":
-        versions_root = os.path.join(path, _VERSIONS_DIR)
-        next_n = (int(current.split("_")[1]) + 1) if current else 1
-        next_version = f"v_{next_n:06d}"
-        target = os.path.join(versions_root, next_version)
-        edges = _recluster_and_verify(target, "live pointer")
-        _commit_pointer(versions_root, next_version, spark)
-        # everything the pointer doesn't name is now unreferenced —
-        # remove best-effort, EXCEPT the newest ``keep_versions``
-        # retired units (the in-flight-reader grace window; see
-        # docstring). Re-swept by every later compact, so a crash
-        # between a past commit and its cleanup cannot strand a stale
-        # shadow copy forever. Stale flat DATA files in the root are
-        # always swept eagerly (see _retired_units: the blank-pointer
-        # hardening needs an empty root), and only parquet-looking root
-        # entries are: caller sidecars stored next to the data (edge
-        # snapshots, markers — the zorder_layout docstring invites
-        # them) are not data and are left alone.
-        for unit in _retired_units(path, next_version, spark)[
-            max(0, int(keep_versions)):
-        ]:
-            _delete_tree(unit, spark)
-        for entry in _list_entries(path, spark):
-            if entry != _VERSIONS_DIR and entry.endswith(".parquet"):
-                _delete_tree(os.path.join(path, entry), spark)
-        return edges
-
-    tmp = path.rstrip("/") + ".compact"
-    retired = path.rstrip("/") + ".retired"
-    for leftover in (tmp, retired):
-        shutil.rmtree(leftover, ignore_errors=True)
-    edges = _recluster_and_verify(tmp, "live table")
-    os.rename(path, retired)
-    os.rename(tmp, path)
-    shutil.rmtree(retired, ignore_errors=True)
-    return edges
-
-
-def _multiset_fingerprint(d: DataFrame):
-    """Order-insensitive multiset fingerprint that stays a ONE-ROW
-    collect at any scale: row count plus two independent wrapped hash
-    sums (decimal(38) so 100-TB row counts cannot overflow the sum
-    itself). An engine bug that drops, duplicates, or rewrites rows
-    moves at least one of the three."""
-    j = F.to_json(F.struct(*sorted(d.columns)))
-    return d.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64(j).cast("decimal(38,0)")).alias("s1"),
-        F.sum(F.xxhash64(j, F.lit("salt")).cast("decimal(38,0)")).alias("s2"),
-    ).collect()[0]
-
-
-def _retired_units(path: str, live_version: str, spark) -> list[str]:
-    """Paths of the retired versioned units of a manifest table, NEWEST
-    first (descending version number, live unit excluded). The
-    retention slice ``[keep_versions:]`` over this list grants the
-    in-flight-reader grace window to the most recently retired units.
-
-    Deliberately EXCLUDES the pre-manifest flat root files: those are
-    always swept eagerly, because the blank-pointer hardening depends
-    on it — a crashed later commit reads as no-pointer and resolves to
-    the ROOT, which must then hold no data so the read fails loudly;
-    a retained flat generation there would be served as silently-stale
-    data instead. The first compact therefore gives no grace to
-    readers of the pre-manifest flat state — convert during a quiet
-    window (the same boundary as Delta's CONVERT)."""
-    versions_root = os.path.join(path, _VERSIONS_DIR)
-    return [
-        os.path.join(versions_root, e)
-        for e in sorted(
-            (
-                e
-                for e in _list_entries(versions_root, spark)
-                if e.startswith("v_") and e != live_version
-            ),
-            key=lambda e: int(e.split("_")[1]),
-            reverse=True,
-        )
-    ]
-
-
-def vacuum_clustered_table(path: str, spark, keep_versions: int = 0) -> list[str]:
-    """Explicitly remove retired generations a compact's retention
-    window kept (the separate-vacuum half of the Delta/Iceberg shape:
-    ``compact_clustered_table(keep_versions=1)`` leaves the previous
-    unit for in-flight readers; this call reclaims it once no reader
-    can still hold it — a boundary only the DEPLOYMENT knows, which is
-    why vacuum is explicit and never implied by a compact).
-
-    ``keep_versions`` has the same meaning as on the compact (0 here:
-    remove every retired generation). No-op on a never-manifest-
-    compacted table. Returns the paths removed."""
-    current = _read_pointer(path, spark)
-    if current is None:
-        return []
-    removed: list[str] = []
-    for unit in _retired_units(path, current, spark)[
-        max(0, int(keep_versions)):
-    ]:
-        _delete_tree(unit, spark)
-        removed.append(unit)
-    return removed
-
-
 def _rename(src: str, dst: str, spark) -> None:
-    """Directory rename, scheme-portable (atomic on POSIX/HDFS; on
-    object stores a per-object copy — see compact_ingest_units)."""
+    """Directory rename, scheme-portable. Used only to move a
+    gate-failed fold out of the lake as evidence; no commit depends on
+    it."""
     if _use_local_fs(src, spark):
         os.rename(_strip_file_scheme(src), _strip_file_scheme(dst))
         return
     fs, jsrc = _hadoop_fs(spark, src)
     if not fs.rename(jsrc, spark._jvm.org.apache.hadoop.fs.Path(dst)):
         raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def _create_record(unit: str, replaces: list[str], spark) -> None:
+    """Commit ``unit``: create its ``_COMMITTED`` record with an
+    exclusive create — ``open(mode="x")`` locally,
+    ``create(overwrite=False)`` through the Hadoop FileSystem elsewhere
+    (one small PUT on S3-class stores). Nothing is renamed and nothing
+    is overwritten. The record's EXISTENCE is the commit, and it is
+    created after every data object, so a reader that sees a
+    half-written record still sees a complete unit. The payload names
+    the units this one replaces (an audit trail, never read back)."""
+    import json
+
+    record = os.path.join(unit, _COMMIT_RECORD)
+    payload = json.dumps({"replaces": replaces})
+    if _use_local_fs(record, spark):
+        with open(_strip_file_scheme(record), "x") as f:
+            f.write(payload)
+        return
+    fs, jp = _hadoop_fs(spark, record)
+    stream = fs.create(jp, False)
+    try:
+        stream.write(bytearray(payload.encode("utf-8")))
+    finally:
+        stream.close()
 
 
 def _ingest_unit_span(name: str) -> tuple[int, int] | None:
@@ -1167,31 +874,15 @@ def _is_folded_name(name: str) -> bool:
     return name.startswith("batch=c")
 
 
-def _ingest_spans(
-    lake: str, spark
-) -> tuple[dict[str, tuple[int, int]], list[str]]:
-    """(committed spans, uncommitted folded names) of the ingest units
-    under ``lake``. A plain ``batch=<id>`` unit is always committed
-    (the stream's overwrite-by-batch-id replay handles its partial
-    states); a folded ``batch=c<lo>-<hi>`` unit counts only once its
-    ``_FOLD_COMMITTED`` marker exists — a marker-less folded unit is a
-    promote that crashed mid-copy (or pre-marker) and must neither be
-    read nor retire the originals its range covers. Uncommitted names
-    come back span-ordered, separately, for the repair sweep."""
-    spans: dict[str, tuple[int, int]] = {}
-    uncommitted: list[str] = []
-    for e in _list_entries(lake, spark):
-        span = _ingest_unit_span(e)
-        if span is None:
-            continue
-        if _is_folded_name(e) and not _exists(
-            os.path.join(lake, e, _FOLD_MARKER), spark
-        ):
-            uncommitted.append(e)
-            continue
-        spans[e] = span
-    uncommitted.sort(key=lambda n: (_ingest_unit_span(n), n))
-    return spans, uncommitted
+def _version_number(name: str) -> int | None:
+    """N of a ``_versions/v_NNNNNN`` unit name; None for anything else."""
+    prefix = _VERSIONS_DIR + "/v_"
+    if not name.startswith(prefix):
+        return None
+    try:
+        return int(name[len(prefix):])
+    except ValueError:
+        return None
 
 
 def _subsumed_units(spans: dict[str, tuple[int, int]]) -> list[str]:
@@ -1200,7 +891,7 @@ def _subsumed_units(spans: dict[str, tuple[int, int]]) -> list[str]:
     crash leftovers (same sweep covers both). Dict-deduped: after two
     crashed folds a unit can sit inside two ranges at once and must
     still appear exactly once. Span-ordered (listing order is
-    filesystem-dependent) so repair/report output is deterministic."""
+    filesystem-dependent) so vacuum/report output is deterministic."""
     ordered = sorted(spans.items(), key=lambda kv: (kv[1], kv[0]))
     return list(dict.fromkeys(
         name
@@ -1211,85 +902,269 @@ def _subsumed_units(spans: dict[str, tuple[int, int]]) -> list[str]:
     ))
 
 
-def resolve_ingest_units(lake: str, spark=None) -> list[str]:
-    """LIVE unit paths of a batch-keyed ingest lake — every
-    ``batch=<id>`` / ``batch=c<lo>-<hi>`` unit whose span is NOT
-    contained in another unit's span. This is the lake's reader
-    protocol (the glob-regime twin of :func:`resolve_clustered_table`):
-    after a fold, the subsumed originals are RETAINED on disk for
-    in-flight readers (see :func:`compact_ingest_units`), so a raw
-    ``spark.read.parquet("<lake>/batch=*")`` would double-count them;
-    span-filtering here reads exactly one copy in EVERY state the
-    single-runner lifecycle can produce — mid-fold, post-fold,
-    post-crash — because a folded unit is LIVE only once its
-    ``_FOLD_COMMITTED`` marker exists, written strictly after every
-    data object: a listing concurrent with a promote — even the
-    non-atomic per-object copy an S3-class rename performs — excludes
-    the marker-less partial unit and keeps reading the still-present
-    originals; once the marker lands (one small PUT, the commit
-    point), the folded unit is complete and the originals drop out by
-    span containment. Cheap and read-only: one directory listing, one
-    marker-existence probe per folded unit (folded units stay few by
-    construction), pure-Python span math — safe to call at reader
-    startup with no compactor coordination.
+def _split_units(names, committed) -> tuple[list[str], list[str]]:
+    """The one resolver rule: split a store's entry names (relative to
+    its root) into ``(live, dead)`` units. Pure — the lifecycle
+    property test drives it over a model store.
+
+    ``committed(name)`` says whether the unit's commit record exists;
+    it is asked only of units that need one.
+
+    - A store holding ``batch=`` units is an ingest lake. A plain
+      ``batch=<id>`` unit is committed by its landing (the stream
+      overwrites by batch id); a folded ``batch=c<lo>-<hi>`` unit only
+      by its record. Live: the committed units no other committed
+      unit's span contains, span-ordered. Dead: the contained ones,
+      then the unrecorded folds.
+    - Any other store is a clustered table. Live: its highest
+      committed ``_versions/v_NNNNNN``, or the root itself (``""``)
+      when no version has committed. Dead: every other version, plus
+      the root's flat ``*.parquet`` files once a version has
+      committed.
     """
-    spans, _ = _ingest_spans(lake, spark)
-    dead = set(_subsumed_units(spans))
-    return [
-        os.path.join(lake, n)
-        for n in sorted(spans, key=lambda n: (spans[n][1], spans[n][0]))
-        if n not in dead
-    ]
+    spans: dict[str, tuple[int, int]] = {}
+    unrecorded: list[str] = []
+    for n in names:
+        span = _ingest_unit_span(n)
+        if span is None:
+            continue
+        if _is_folded_name(n) and not committed(n):
+            unrecorded.append(n)
+        else:
+            spans[n] = span
+    if spans or unrecorded:
+        dead = _subsumed_units(spans)
+        live = sorted(
+            (n for n in spans if n not in dead),
+            key=lambda n: (spans[n][1], spans[n][0]),
+        )
+        unrecorded.sort(key=lambda n: (_ingest_unit_span(n), n))
+        return live, dead + unrecorded
+    versions = sorted(
+        (n for n in names if _version_number(n) is not None),
+        key=_version_number,
+    )
+    live = next((v for v in reversed(versions) if committed(v)), None)
+    if live is None:
+        return [""], versions
+    flat = sorted(n for n in names if n.endswith(".parquet"))
+    return [live], [v for v in versions if v != live] + flat
 
 
-def read_ingest_lake(spark, lake: str) -> DataFrame:
-    """``spark.read.parquet`` over :func:`resolve_ingest_units` — the
-    supported way to read a batch-keyed ingest lake once
-    :func:`compact_ingest_units` runs on it (a raw ``batch=*`` glob
-    double-counts the retained generation between a fold and the next
-    repair). An empty lake fails loudly in the parquet reader rather
-    than returning an empty frame."""
-    units = resolve_ingest_units(lake, spark)
+def _units(path: str, spark) -> tuple[list[str], list[str]]:
+    """``(live, dead)`` unit names of the store at ``path``: one
+    listing of the root (plus one of ``_versions`` when present) and
+    one record probe per unit that needs one."""
+    names = _list_entries(path, spark)
+    if _VERSIONS_DIR in names:
+        versions_root = os.path.join(path, _VERSIONS_DIR)
+        names += [
+            f"{_VERSIONS_DIR}/{e}" for e in _list_entries(versions_root, spark)
+        ]
+    return _split_units(
+        names,
+        lambda n: _exists(os.path.join(path, n, _COMMIT_RECORD), spark),
+    )
+
+
+def resolve_units(path: str, spark=None) -> list[str]:
+    """LIVE unit paths of a clustered table or an ingest lake — the
+    one reader protocol for both stores (rule: :func:`_split_units`).
+
+    A clustered table resolves to one path: its highest committed
+    ``_versions/v_NNNNNN`` unit, or ``path`` itself if it was never
+    compacted. An ingest lake resolves to its committed units that no
+    other committed unit's span contains. Every answer reads every row
+    exactly once, in every state the single-runner lifecycle can reach
+    (mid-compact, post-compact, post-crash): a unit counts only once
+    its commit record exists, and the record is created after its last
+    data object, so a listing concurrent with a compact — even one
+    whose data lands as non-atomic per-object PUTs — never sees a
+    partial unit. A raw ``spark.read.parquet(path)`` or ``batch=*``
+    glob does not get this guarantee: it misses a compacted table's
+    live unit and double-counts a folded lake's retained generation.
+
+    Read-only and cheap: one or two listings plus one small existence
+    probe per unit that needs a record (units stay few by
+    construction). Pass ``spark`` for non-local paths; a remote-scheme
+    path without a session raises ``ValueError``.
+
+    Reader grace: a resolved unit stays on disk until the NEXT compact
+    of the store (or an explicit :func:`vacuum_units`) — each compact
+    keeps the generation it replaced. A reader that outlives that loses
+    its files LOUDLY mid-scan; re-resolve and retry. (A never-compacted
+    table's flat files are the exception: the first compact sweeps
+    them at once.)
+    """
+    live, _ = _units(path, spark)
+    return [os.path.join(path, n) if n else path for n in live]
+
+
+def read_units(spark, path: str) -> DataFrame:
+    """``spark.read.parquet`` over :func:`resolve_units`. A store with no
+    live unit fails loudly rather than returning an empty frame."""
+    units = resolve_units(path, spark)
     if not units:
-        raise FileNotFoundError(f"no ingest units under {lake}")
+        raise FileNotFoundError(f"no live units under {path}")
     return spark.read.parquet(*units)
 
 
-def repair_ingest_units(lake: str, spark=None) -> list[str]:
-    """Delete every dead ingest unit — the retired generation (units
-    span-contained in a COMMITTED folded unit) and any marker-less
-    folded unit (a promote that crashed mid-copy or before its commit
-    marker; its originals are all still live, so deleting the partial
-    is lossless) — plus a stale ``.fold_tmp`` staging dir, and return
-    the deleted unit names. This is the fold's own step 1, exposed so
-    callers can reclaim the retained generation's storage early — or
-    restore the flat one-copy invariant for legacy ``batch=*`` glob
-    readers — without paying for a full fold. Cheap: one listing,
-    pure-Python span containment, the deletes. Same single-runner
-    convention as the fold (never run concurrently with one); resolver
-    readers (:func:`resolve_ingest_units`) that resolved BEFORE the
-    previous fold lose their retained files here, exactly like
-    outliving ``keep_versions`` in the manifest regime — loudly, never
-    silently wrong.
+def vacuum_units(path: str, spark=None) -> list[str]:
+    """Delete every unit of ``path`` that is not live — the generation
+    the last compact kept for in-flight readers, unrecorded units a
+    crashed compact left, and a table's flat root files once a version
+    has committed — and return their names relative to ``path``.
 
-    The returned names are CONFIRMED removed: every delete is
-    post-checked with ``_exists`` (``_delete_tree`` is deliberately
-    best-effort — rmtree ``ignore_errors`` locally, except-pass via
-    Hadoop), so a unit whose delete silently failed is NOT reported as
-    reclaimed. Callers that must not tolerate a survivor (the fold —
-    re-folding a surviving retired unit would double-count its rows,
-    and a surviving marker-less unit could collide with the promote
-    target) compare the fresh listing instead of this return value."""
-    spans, uncommitted = _ingest_spans(lake, spark)
-    dead = _subsumed_units(spans) + uncommitted
+    Every compact runs this first; call it directly to reclaim the
+    retained generation early. Readers that resolved before the last
+    compact lose their files here — loudly, never silently wrong — so
+    vacuum when no such reader can still be running. Same single-runner
+    convention as the compacts.
+
+    The returned names are CONFIRMED removed: ``_delete_tree`` is
+    best-effort (rmtree ``ignore_errors`` locally, except-pass via
+    Hadoop), so each delete is post-checked with ``_exists`` and a unit
+    whose delete silently failed is NOT reported."""
+    _, dead = _units(path, spark)
     removed = []
     for name in dead:
-        target = os.path.join(lake, name)
+        target = os.path.join(path, name)
         _delete_tree(target, spark)
         if not _exists(target, spark):
             removed.append(name)
-    _delete_tree(os.path.join(lake, ".fold_tmp"), spark)
     return removed
+
+
+def _vacuum_for_compact(path: str, spark) -> tuple[list[str], list[str]]:
+    """Step 1 of both compacts: :func:`vacuum_units`, then a fresh
+    listing. Returns ``(vacuumed, live)``. RAISES if any dead unit
+    survived its delete: a retired lake unit re-entering a fold's
+    candidates would double-count its rows (and pass the multiset gate,
+    which compares against the same duplicated union), and a surviving
+    unrecorded unit could collide with the new unit's name."""
+    vacuumed = vacuum_units(path, spark)
+    live, dead = _units(path, spark)
+    if dead:
+        raise RuntimeError(
+            f"vacuum left dead units under {path}: {dead} — a delete "
+            "silently failed, and compacting over a surviving dead unit "
+            "could duplicate its rows. Fix the store "
+            "(permissions/consistency) and re-run vacuum_units; no data "
+            "was written"
+        )
+    return vacuumed, live
+
+
+def _write_verified(source: DataFrame, unit: str, cols, spark, **layout):
+    """Steps 2-3 of both compacts: re-cluster ``source`` into the new
+    ``unit``, then the multiset gate. Returns ``(edges, ok)``; nothing
+    is committed here."""
+    edges = zorder_layout(source, list(cols), unit, **layout)
+    ok = (_multiset_fingerprint(spark.read.parquet(unit))
+          == _multiset_fingerprint(source))
+    return edges, ok
+
+
+def compact_clustered_table(
+    df_or_path,
+    cols: Sequence[str],
+    bits: int | None = None,
+    num_files: int | None = None,
+    row_group_bytes: int | None = None,
+    compression: str = "zstd",
+    curve: str = "morton",
+    spark=None,
+) -> dict[str, list[float]]:
+    """Re-cluster an incrementally-appended table back to the global
+    bound as a new versioned unit — the table-level twin of the index
+    lifecycles' compact step.
+
+    ``mode="append"`` ingestion pins the kept fraction at the
+    per-BATCH tiling bound (measured: 0.270 ten-batch incremental vs
+    0.132 global at the ×10 layout — BENCH.md round 12); compaction
+    recovers the global bound by re-clustering the merged unit once.
+
+    The lifecycle is the one every compact here runs:
+
+    1. :func:`vacuum_units` — drop the generation the previous compact
+       kept, and any unrecorded version a crashed compact left; raise if
+       a delete silently failed.
+    2. Write the live unit's rows, re-clustered, to the next
+       ``<path>/_versions/v_NNNNNN`` (underscore-prefixed, so Spark's
+       listing never sees it as data).
+    3. Multiset gate: a full-row fingerprint of the new unit must equal
+       the live unit's. On a mismatch the call raises; the new unit
+       stays unrecorded (never read, kept for inspection until the next
+       vacuum) and the live table is untouched.
+    4. Create the new unit's ``_COMMITTED`` record. From that moment it
+       is the highest committed version, so it is live.
+
+    Nothing is renamed and nothing is overwritten, so the commit is one
+    small PUT on every store — S3-class and HDFS included. A crash
+    before step 4 leaves the old unit live and an unrecorded one the
+    next vacuum removes. The replaced unit stays on disk until the next
+    compact or an explicit vacuum (the reader grace in
+    :func:`resolve_units`).
+
+    The first compact of a never-compacted table also sweeps the root's
+    flat ``*.parquet`` files right after the commit, so a raw
+    ``spark.read.parquet(path)`` fails loudly instead of serving a stale
+    flat copy; readers of that flat state get no grace — convert during
+    a quiet window. Other root entries (the hidden ``_edges.json``
+    sidecar, markers) are not data and are left alone. A crash before
+    the sweep leaves files the resolver already ignores and the next
+    vacuum removes.
+
+    Accepts a path (str); ``spark`` is required. ``bits=None`` law-sizes
+    the re-clustered geometry (see :func:`zorder_layout`). At 100 TB
+    you compact on whatever cadence the measured incremental-vs-global
+    gap justifies — the same amortization argument as the LSH index
+    compaction.
+    """
+    if not isinstance(df_or_path, str):
+        raise ValueError(
+            "compact_clustered_table takes the table PATH (the compact "
+            "writes a new unit under it; a DataFrame has no directory)"
+        )
+    path = df_or_path
+    if spark is None:
+        raise ValueError("spark session required when passing a path")
+    _, (live,) = _vacuum_for_compact(path, spark)
+    source = spark.read.parquet(os.path.join(path, live) if live else path)
+    unit = os.path.join(
+        path, _VERSIONS_DIR, f"v_{(_version_number(live) or 0) + 1:06d}"
+    )
+    edges, ok = _write_verified(
+        source, unit, cols, spark, bits=bits, num_files=num_files,
+        row_group_bytes=row_group_bytes, compression=compression,
+        curve=curve,
+    )
+    if not ok:
+        raise RuntimeError(
+            f"compact of {path} changed the row multiset; {unit} kept "
+            "unrecorded for inspection (never read; the next vacuum "
+            "removes it), live table untouched"
+        )
+    _create_record(unit, [live or "."], spark)
+    if not live:
+        for entry in _list_entries(path, spark):
+            if entry.endswith(".parquet"):
+                _delete_tree(os.path.join(path, entry), spark)
+    return edges
+
+
+def _multiset_fingerprint(d: DataFrame):
+    """Order-insensitive multiset fingerprint that stays a ONE-ROW
+    collect at any scale: row count plus two independent wrapped hash
+    sums (decimal(38) so 100-TB row counts cannot overflow the sum
+    itself). An engine bug that drops, duplicates, or rewrites rows
+    moves at least one of the three."""
+    j = F.to_json(F.struct(*sorted(d.columns)))
+    return d.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(j).cast("decimal(38,0)")).alias("s1"),
+        F.sum(F.xxhash64(j, F.lit("salt")).cast("decimal(38,0)")).alias("s2"),
+    ).collect()[0]
 
 
 def compact_ingest_units(
@@ -1302,203 +1177,107 @@ def compact_ingest_units(
     compression: str = "zstd",
     curve: str = "morton",
     keep_last: int = 1,
-    promote: str = "rename",
 ) -> dict:
     """Fold the older ``batch=<id>`` units of a batch-keyed ingest lake
     (the ``streaming_clustered_ingest`` layout) into ONE re-clustered
-    unit — the ingest-side compactor that keeps the unit count bounded
-    while preserving the lake's contracts: readers resolve live units
-    through :func:`resolve_ingest_units` / :func:`read_ingest_lake`,
-    and the streaming landing stays idempotent (future batch ids are
-    monotone, so they can never collide with a folded unit's range
-    name).
+    ``batch=c<lo>-<hi>`` unit — the ingest-side compactor that keeps
+    the unit count bounded. Readers resolve live units through
+    :func:`resolve_units` / :func:`read_units`, and the streaming
+    landing stays idempotent (future batch ids are monotone, so they
+    can never collide with a folded unit's range name).
 
-    Mechanism (verify-then-promote, like every compact here):
+    Same lifecycle as :func:`compact_clustered_table`:
 
-    1. REPAIR (:func:`repair_ingest_units`): delete any unit whose
-       batch-id span is contained in a committed unit's range — the
-       retired generation the PREVIOUS fold left in place — plus any
-       marker-less folded unit (a promote that crashed before its
-       commit marker; lossless to delete, its originals are all still
-       live). Repair runs BEFORE candidates are chosen so a retry
-       converges instead of re-folding duplicates. Because
-       ``_delete_tree`` is best-effort, the fold then re-lists and
-       RAISES if any dead unit survived its delete: a surviving
-       retired unit re-entering the candidate set would double-count
-       its rows into the folded unit (and pass the fingerprint gate,
-       which compares staging against the same duplicated union), and
-       a surviving marker-less unit could collide with the promote
-       target — a silently failed delete is never re-folded.
+    1. :func:`vacuum_units` — drop the units a committed unit's span
+       contains (the generation the previous fold kept) and any
+       unrecorded fold a crash left (lossless: its originals are all
+       still live). Vacuum runs BEFORE candidates are chosen so a retry
+       converges instead of re-folding duplicates, and the fold RAISES
+       if any dead unit survived its delete.
     2. Candidates = every live unit except the ``keep_last``
        newest-by-span-end (the hot tail the stream is still near);
        no-op with fewer than 2 candidates. ``keep_last >= 1`` is a
        CORRECTNESS requirement, not a tuning knob, and 0 raises:
        ``foreachBatch`` is at-least-once, so the newest batch id can
        always be re-landed by a replay — if its (possibly partial)
-       first copy were folded into a range, the next repair would
+       first copy were folded into a range, the next vacuum would
        delete the fully-replayed unit as "contained" and permanently
-       lose the rows the partial copy was missing.
-    3. One ``zorder_layout`` over the union of candidate units,
-       reusing the lake's persisted edge snapshot when present so the
-       folded unit stays in the SAME key space as the stream's
-       appends; multiset fingerprint must equal the candidates' union
-       BEFORE anything is promoted. The write target depends on
-       ``promote``:
-
-       - ``promote="rename"`` (default): write into the HIDDEN staging
-         dir ``<lake>/.fold_tmp`` (dot-prefixed: invisible to the
-         resolver, any glob, and any flat listing), then promote with
-         ONE directory rename to ``batch=c<lo>-<hi>``. On local/HDFS
-         stores the rename is a cheap metadata move; on S3-class
-         stores it is a per-object COPY of the folded span — a cost,
-         never a correctness issue (see step 4).
-       - ``promote="direct"``: write STRAIGHT to ``batch=c<lo>-<hi>``
-         — no staging, no rename, NO per-object copy on any store.
-         This is safe for exactly the reason step 4 gives: a folded
-         unit without its ``_FOLD_COMMITTED`` marker does not exist as
-         far as the resolver and the repair sweep are concerned, so
-         the in-progress write is as invisible through the supported
-         read path as a dot-prefixed dir (only a raw ``batch=*`` glob
-         could see it mid-write, and glob reads are already documented
-         as valid only on never-folded lakes). This regime is the
-         prescribed choice on object stores; ``rename`` remains the
-         default because the dot-prefixed staging is additionally
-         invisible to flat listings and out-of-band tooling, which is
-         worth one free metadata move wherever rename IS cheap. A
-         manifest/pointer promote (the ``compact_clustered_table``
-         ``swap="manifest"`` machinery) would also avoid the copy but
-         needs a second reader protocol beside the span resolver;
-         ``direct`` closes the same cost with zero new read-path
-         surface, so it is the adjudicated alternative.
-
-       On a fingerprint mismatch the written output is renamed to
-       ``<lake>/.fold_failed`` (replacing any earlier failure) so a
-       routine retry's step-1 sweep cannot clobber the evidence, and
-       the call raises with the originals untouched. If that
-       evidence-preserving move itself fails, the ORIGINAL diagnostic
-       still raises (noting that the output stayed where it was
-       written and the next repair sweep will delete it).
-    4. Commit: the ``_FOLD_COMMITTED`` marker is written INSIDE the
-       folded unit — strictly after every data object — as the COMMIT
-       POINT (one small PUT, atomic per object on every store). A
-       folded unit without its marker is invisible to the resolver and
-       deleted by the next repair, so even on stores whose rename is a
-       non-atomic per-object copy (S3-class) no reader can observe a
-       partial folded unit: correctness never depends on rename
-       atomicity in EITHER promote regime. The subsumed
-       units are RETAINED in place as the retired generation — deleted
-       by the NEXT fold's repair pass (or an explicit
-       :func:`repair_ingest_units`), never by this one. That is the
-       same one-generation reader grace the manifest compact gives
-       (``compact_clustered_table`` ``keep_versions``): a reader that
-       resolved its unit list just before the promote keeps every
-       listed file alive until the next fold, and a resolver reader
-       listing at ANY point sees exactly one copy of every row — the
-       crash window between rename and delete is gone because there is
-       no delete. Cost: one retained extra copy of the folded span
-       until the next fold/repair. A raw ``batch=*`` glob, by contrast,
-       double-counts the retained generation — glob reads are only
-       valid on a never-folded lake.
+       lose the rows the partial copy was missing. One
+       ``zorder_layout`` of the candidates' union writes straight to
+       ``batch=c<lo>-<hi>``, reusing the lake's persisted edge snapshot
+       when present so the folded unit stays in the SAME key space as
+       the stream's appends. Until step 4 the unit is unrecorded, so
+       the resolver does not see it.
+    3. Multiset gate against the candidates' union. On a mismatch the
+       written unit is renamed to ``<lake>/.fold_failed`` (replacing
+       any earlier failure) so a routine retry's vacuum cannot clobber
+       the evidence, and the call raises with the originals untouched.
+       If that evidence move itself fails, the ORIGINAL diagnostic
+       still raises (noting that the unit stayed where it was written
+       and the next vacuum will delete it).
+    4. Create the folded unit's ``_COMMITTED`` record. The candidates
+       then drop out of the live set by span containment; they stay on
+       disk until the next fold or an explicit :func:`vacuum_units`
+       (the reader grace in :func:`resolve_units`).
 
     Single-runner assumption as repo-wide: one compactor at a time
     (the stream itself never touches folded names).
 
     Returns ``{"folded": n_units, "unit": name_or_None,
-    "edges": edges_or_None, "repaired": [names...],
-    "retired": [names...]}`` — ``repaired`` is what step 1 deleted,
-    ``retired`` the units this fold subsumed and left for the next
-    sweep.
+    "edges": edges_or_None, "vacuumed": [names...],
+    "retired": [names...]}`` — ``vacuumed`` is what step 1 deleted,
+    ``retired`` the units this fold replaced and left for the next
+    vacuum.
     """
     if int(keep_last) < 1:
         raise ValueError(
             f"keep_last must be >= 1 (got {keep_last}): the newest "
             "batch id can always be re-landed by an at-least-once "
             "replay, and folding a partial first copy would make the "
-            "next repair delete the fully-replayed unit as contained — "
+            "next vacuum delete the fully-replayed unit as contained — "
             "permanent row loss, not a performance trade"
         )
-    if promote not in ("rename", "direct"):
-        raise ValueError(
-            f"promote must be 'rename' or 'direct' (got {promote!r})"
-        )
-    repaired = repair_ingest_units(lake, spark)
-    spans, uncommitted = _ingest_spans(lake, spark)
-    # _delete_tree is best-effort: a dead unit that survived repair's
-    # delete would re-enter the candidate union and double-count its
-    # rows past the fingerprint gate (which compares staging against
-    # the same duplicated union), or collide with the promote target.
-    # Never re-fold a silently failed delete — fail loudly instead.
-    leftover = sorted(set(_subsumed_units(spans)) | set(uncommitted))
-    if leftover:
-        raise RuntimeError(
-            f"repair left dead ingest units under {lake}: {leftover} — "
-            "a delete silently failed, and folding over a surviving "
-            "retired unit would permanently duplicate its rows. Fix "
-            "the store (permissions/consistency) and re-run "
-            "repair_ingest_units; no data was written"
-        )
-
-    ordered = sorted(spans, key=lambda n: spans[n][1])
-    candidates = ordered[: max(0, len(ordered) - int(keep_last))]
+    vacuumed, live = _vacuum_for_compact(lake, spark)
+    candidates = live[: max(0, len(live) - int(keep_last))]
     if len(candidates) < 2:
         return {"folded": 0, "unit": None, "edges": None,
-                "repaired": repaired, "retired": []}
-    lo = min(spans[n][0] for n in candidates)
-    hi = max(spans[n][1] for n in candidates)
-    union = spark.read.parquet(
-        *[os.path.join(lake, n) for n in candidates]
-    )
-    folded_name = f"batch=c{lo}-{hi}"
-    # promote="direct" writes straight to the final name — marker-less,
-    # so invisible to the resolver until the commit point lands; no
-    # staging rename, no per-object copy on S3-class stores (step 3)
-    staging = (os.path.join(lake, folded_name) if promote == "direct"
-               else os.path.join(lake, ".fold_tmp"))
-    edges = zorder_layout(
-        union, list(cols), staging, bits=bits, num_files=num_files,
+                "vacuumed": vacuumed, "retired": []}
+    spans = [_ingest_unit_span(n) for n in candidates]
+    name = f"batch=c{min(s[0] for s in spans)}-{max(s[1] for s in spans)}"
+    unit = os.path.join(lake, name)
+    union = spark.read.parquet(*[os.path.join(lake, n) for n in candidates])
+    edges, ok = _write_verified(
+        union, unit, cols, spark, bits=bits, num_files=num_files,
         row_group_bytes=row_group_bytes, compression=compression,
         curve=curve, edges=load_edge_snapshot(lake, spark),
     )
-    if (_multiset_fingerprint(spark.read.parquet(staging))
-            != _multiset_fingerprint(union)):
+    if not ok:
         failed = os.path.join(lake, ".fold_failed")
         preserved = True
         try:
             _delete_tree(failed, spark)
             if _exists(failed, spark):
                 raise OSError(f"earlier failure at {failed} not clearable")
-            _rename(staging, failed, spark)
+            _rename(unit, failed, spark)
         except Exception:
             # never mask the diagnostic below with a secondary failure
             # of the evidence-preserving move itself
             preserved = False
         note = (
-            f"staging kept for inspection at {failed} (replaces any "
-            "earlier failure; repair never touches it)"
+            f"the written unit is kept for inspection at {failed} "
+            "(replaces any earlier failure; vacuum never touches it)"
             if preserved else
-            f"moving the staging from {staging} to {failed} FAILED — "
-            "it remains where it was written and the NEXT repair sweep "
-            "will delete it; inspect before re-running"
+            f"moving the written unit from {unit} to {failed} FAILED — "
+            "it remains unrecorded where it was written and the NEXT "
+            "vacuum will delete it; inspect before re-running"
         )
         raise RuntimeError(
             f"ingest fold of {lake} changed the row multiset; {note}; "
             "original units untouched"
         )
-    if promote == "rename":
-        _rename(staging, os.path.join(lake, folded_name), spark)
-    # the commit point: one small PUT strictly after every data object
-    # (see step 4 above) — before this lands the folded unit does not
-    # exist as far as the resolver and the next repair are concerned
-    import json
-
-    _write_small_file(
-        os.path.join(lake, folded_name, _FOLD_MARKER),
-        json.dumps({"folded": list(candidates), "lo": lo, "hi": hi}),
-        spark,
-    )
-    return {"folded": len(candidates), "unit": folded_name,
-            "edges": edges, "repaired": repaired,
-            "retired": list(candidates)}
+    _create_record(unit, candidates, spark)
+    return {"folded": len(candidates), "unit": name, "edges": edges,
+            "vacuumed": vacuumed, "retired": candidates}
 
 
 def layout_scan_fraction(
@@ -1535,21 +1314,21 @@ def layout_scan_fraction(
             return _dt.datetime.combine(v, _dt.time.min)
         return v
 
-    # manifest tables measure their LIVE unit; hidden (_/.-prefixed)
-    # entries are pruned from the walk exactly as Spark's file listing
-    # prunes them, so versioned/retired units never double-count
-    path = resolve_clustered_table(path)
+    # only the LIVE units are measured (a retained generation or an
+    # unrecorded unit would double-count); inside a unit, hidden
+    # (_/.-prefixed) entries are pruned exactly as Spark's listing does
     files = []
-    if os.path.isdir(path):
-        for root, dirs, names in os.walk(path):
+    for unit in resolve_units(path):
+        if not os.path.isdir(unit):
+            files.append(unit)
+            continue
+        for root, dirs, names in os.walk(unit):
             dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
             files.extend(
                 os.path.join(root, n)
                 for n in names
                 if n.endswith(".parquet") and not n.startswith(("_", "."))
             )
-    else:
-        files = [path]
     total_groups = kept_groups = 0
     total_rows = kept_rows = 0
     for f in sorted(files):

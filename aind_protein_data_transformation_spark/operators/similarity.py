@@ -35,10 +35,10 @@ from pyspark.sql.window import Window
 from ..functions.vector import dot, norm
 
 #: Measured crossover for exact cosine top-k, re-anchored late round 8
-#: under the FAIR calibration protocol (calibrate_dispatch with every
-#: candidate in interleaved_ab's callable form, so the GEMM side's
-#: driver collect + matrix build is billed per run: 20k corpus, 5
-#: queries): hof wins dim-64/128, GEMM from dim-192 (1.33x) through
+#: under the FAIR calibration protocol (BENCH.md "Round-8: dispatch
+#: self-calibration" ladder: every candidate in interleaved_ab's
+#: callable form, so the GEMM side's driver collect + matrix build is
+#: billed per run: 20k corpus, 5 queries): hof wins dim-64/128, GEMM from dim-192 (1.33x) through
 #: dim-1024 (3.3x) -> bracket midpoint 160. (The earlier 256 came from
 #: exp_topk_gemm.py's prepared-frame protocol.) Lower than the
 #: quantize crossover: the top-k HOF pays three folds per query x
@@ -56,7 +56,8 @@ TOPK_GEMM_MIN_DIM = 160
 #: through dim-1024 (2x) -> bracket midpoint 96. (The earlier 192 came
 #: from exp_pair_cosine.py's prepared-frame protocol.) Volume caveat
 #: unchanged: at 20k pairs the crossover sits ~900 (BENCH.md round 8)
-#: — callers off this volume should calibrate_dispatch their own.
+#: — callers off this volume should re-measure their own with the
+#: BENCH.md round-8 ladder protocol and pass ``pair_min_dim``.
 PAIR_COSINE_UDF_MIN_DIM = 96
 
 
@@ -846,9 +847,9 @@ def ivf_topk(
     probe stage's query x centroid ranking stays a fold — it is
     codebook-sized, never the cost). ``None`` auto-dispatches by
     probing one corpus row's dimension against ``pair_min_dim`` —
-    defaulted to the module constant, overridable with a value from
-    ``calibrate.calibrate_dispatch`` (the crossover is layout- and
-    volume-dependent). Neighbor sets and ranks agree
+    defaulted to the module constant, overridable with a crossover
+    re-measured on the caller's layout (protocol: BENCH.md round-8
+    dispatch ladder; the crossover is layout- and volume-dependent). Neighbor sets and ranks agree
     with the fold form on tie-free data (BLAS low-bit caveat,
     agreement-tested); default False keeps the oracle-replayable plan.
 

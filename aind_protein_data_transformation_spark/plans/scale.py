@@ -43,14 +43,6 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
       raises a clear contract error when neither is set. Executor loss
       is transparent: blocks are re-read from durable storage. Costs a
       distributed write of the materialized relation.
-    - ``replicated``: ``persist(MEMORY_AND_DISK_2)`` (+ an eager count
-      when ``eager``): two replicas on executors AND lineage retained —
-      a single executor loss is served by the replica, wider loss
-      recomputes from lineage. Costs 2x storage. NOT for the bench
-      loop: a persisted plan whose cache is cleared between timed runs
-      re-executes per consumer without re-storing (the r16 minhash
-      trap, llm_dedup.py), and the cache-manager entry must be released
-      by the caller's lifecycle.
 
     ``eager=False`` defers materialization to the first action (used by
     the connected-components round loop, where the convergence
@@ -71,16 +63,9 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
                 )
             sc.setCheckpointDir(ckdir)
         return df.checkpoint(eager=eager)
-    if mode == "replicated":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-        if eager:
-            out.count()
-        return out
     raise ValueError(
         f"unknown SPARK_GRAFT_MATERIALIZE mode {mode!r}; expected "
-        "local | reliable | replicated"
+        "local | reliable"
     )
 
 

@@ -387,9 +387,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each run and bills the one materialization inside the timing;
     # lifecycle is GC-managed (no cache-manager entry to leak).
     # r17: routed through plans.scale.materialize — the bench default
-    # stays this localCheckpoint, and SPARK_GRAFT_MATERIALIZE=reliable/
-    # replicated switches to cluster-safe durability (see materialize's
-    # docstring for the executor-loss semantics of each mode).
+    # stays this localCheckpoint, and SPARK_GRAFT_MATERIALIZE=reliable
+    # switches to cluster-safe durability (see materialize's docstring
+    # for the executor-loss semantics of each mode).
     materialize(spark.sql(_MH_SIG_SQL)).createOrReplaceTempView("_mh_sig")
     return spark.sql(_MH_VERIFY_SQL).transform(
         lambda d: sorted_small(d, "doc_a", "doc_b")

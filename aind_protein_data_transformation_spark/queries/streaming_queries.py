@@ -555,17 +555,16 @@ def streaming_clustered_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     property regardless of which unit holds the group — and they are
     the natural compaction granularity: ``compact_ingest_units`` folds
     the older units into one re-clustered ``batch=c<lo>-<hi>`` unit
-    (verify-then-promote; the commit point is a ``_FOLD_COMMITTED``
-    marker PUT after every data object, so a crashed promote is
-    invisible to readers and repaired losslessly by range containment)
-    on whatever cadence the incremental-vs-global gap justifies. The fold
-    RETAINS the subsumed units for one generation (deleted by the NEXT
-    fold's repair pass), so a reader that resolved its unit list just
-    before a fold keeps its files alive across it — which is why reads
-    go through ``read_ingest_lake`` / ``resolve_ingest_units`` (span-
-    filtered listing, exactly one copy in every lifecycle state) rather
-    than a raw ``batch=*`` glob, which would double-count the retained
-    generation on a folded lake. A transactional single-dir
+    (vacuum, write, verify, then create the unit's ``_COMMITTED``
+    record after every data object, so a crashed fold is invisible to
+    readers and vacuumed losslessly) on whatever cadence the
+    incremental-vs-global gap justifies. The fold RETAINS the subsumed
+    units for one generation (deleted by the NEXT fold's vacuum), so a
+    reader that resolved its unit list just before a fold keeps its
+    files alive across it — which is why reads go through
+    ``read_units`` / ``resolve_units`` (exactly one copy in every
+    lifecycle state) rather than a raw ``batch=*`` glob, which would
+    double-count the retained generation on a folded lake. A transactional single-dir
     ``mode="append"`` landing remains the right shape on stores with
     atomic commit (Delta-style); on plain parquet, batch-keyed
     overwrite is the form that makes replay exactly-once.
@@ -585,7 +584,7 @@ def streaming_clustered_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.layout import (
         load_edge_snapshot,
-        read_ingest_lake,
+        read_units,
         save_edge_snapshot,
         zorder_layout,
     )
@@ -625,7 +624,7 @@ def streaming_clustered_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     handle.awaitTermination()
     shutil.rmtree(f"{out_root}/_ckpt", ignore_errors=True)
 
-    landed = read_ingest_lake(spark, lake)
+    landed = read_units(spark, lake)
     return (
         landed.filter(
             (F.col("user_id") >= 20) & (F.col("user_id") <= 60)

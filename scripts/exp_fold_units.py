@@ -52,7 +52,6 @@ def main(argv: list[str]) -> int:
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_ingest_units,
         layout_scan_fraction,
-        repair_ingest_units,
         save_edge_snapshot,
         zorder_layout,
     )
@@ -87,10 +86,8 @@ def main(argv: list[str]) -> int:
         lake, COLS, spark, bits=6, num_files=NUM_FILES,
         row_group_bytes=ROW_GROUP_BYTES, curve="hilbert", keep_last=1,
     )
-    # reclaim the fold's retained generation before measuring: the
-    # steady-state lake is folded unit + hot tail, and the footer walk
-    # below counts every file under the path
-    repair_ingest_units(lake, spark)
+    # measured right after the fold: layout_scan_fraction walks only
+    # the live units (folded unit + hot tail), not the retained ones
     geometry["folded"] = layout_scan_fraction(lake, PRED)
     rows = {k: g["rows"] for k, g in geometry.items()}
     assert len(set(rows.values())) == 1, f"arms lost rows: {rows}"

@@ -364,6 +364,7 @@ def test_compact_recovers_global_clustering(spark, tmp_path):
     per-batch appends gave up."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
+        read_units,
     )
 
     n = 128
@@ -385,7 +386,7 @@ def test_compact_recovers_global_clustering(spark, tmp_path):
 
     compact_clustered_table(inc, ["a", "b"], bits=6, num_files=4,
                             row_group_bytes=16 * 1024, spark=spark)
-    back = spark.read.parquet(inc)
+    back = read_units(spark, inc)
     assert back.count() == n * n
     assert back.select(F.countDistinct("a", "b")).collect()[0][0] == n * n
     after = layout_scan_fraction(inc, box)
@@ -400,8 +401,8 @@ def test_compact_recovers_global_clustering(spark, tmp_path):
     # safely.
     assert after["fraction_rows_kept"] < bound["fraction_rows_kept"] + 0.15
     assert before["fraction_rows_kept"] < 0.6  # batches pruned already
-    assert not os.path.exists(inc + ".compact")
-    assert not os.path.exists(inc + ".retired")
+    # the new unit lives under the table; no sibling directory appears
+    assert sorted(os.listdir(tmp_path)) == ["glob", "inc"]
 
     with pytest.raises(ValueError, match="PATH"):
         compact_clustered_table(df, ["a"])
@@ -410,37 +411,35 @@ def test_compact_recovers_global_clustering(spark, tmp_path):
 
 
 def test_compact_swap_crash_points_are_recoverable(spark, tmp_path):
-    """Every inter-rename crash point of compact_clustered_table leaves
-    a recoverable state (same standard the index lifecycles' swap is
-    held to):
+    """Every crash point of a table's first compact leaves a state the
+    resolver reads exactly once and the next compact or vacuum repairs
+    (same standard the index lifecycles' swap is held to):
 
     - a compact that silently drops rows raises at the verify, BEFORE
-      any rename: live table untouched, the bad compact dir kept for
-      inspection;
-    - crash BETWEEN the renames (live -> .retired done, .compact ->
-      live not): the verified old table sits at <path>.retired and the
-      verified new one at <path>.compact - rename either back;
-    - after recovery a fresh compact completes normally and cleans up.
+      the commit record: the live (flat) table is untouched, and the
+      bad unit is kept unrecorded for inspection — never read;
+    - crash before the record: that same unrecorded unit; the retried
+      compact vacuums it and completes;
+    - crash before cleanup (record created, the flat root files not yet
+      swept): readers see only the new unit, and a vacuum removes the
+      stale flat files, reporting each confirmed delete.
     """
-    import shutil
-
     import aind_protein_data_transformation_spark.operators.layout as mod
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
+        read_units,
+        resolve_units,
+        vacuum_units,
     )
 
     rows = [Row(a=float(a), b=float(b)) for a in range(32) for b in range(32)]
     df = spark.createDataFrame(rows)
     live = str(tmp_path / "t")
     zorder_layout(df, ["a", "b"], live, bits=4, num_files=2)
-
-    def nrows(p):
-        return spark.read.parquet(p).count()
-
-    before_rows = nrows(live)
+    v1 = os.path.join(live, "_versions", "v_000001")
 
     # corrupted compact: the re-cluster silently drops rows - the
-    # verify must raise before any rename touches the live table
+    # verify must raise before the record is created
     real_zorder_layout = mod.zorder_layout
 
     def lossy_zorder_layout(d, cols, out, **kw):
@@ -453,30 +452,40 @@ def test_compact_swap_crash_points_are_recoverable(spark, tmp_path):
                                     num_files=2, spark=spark)
     finally:
         mod.zorder_layout = real_zorder_layout
-    assert nrows(live) == before_rows            # live untouched
-    assert os.path.isdir(live + ".compact")      # kept for inspection
-    shutil.rmtree(live + ".compact")
+    assert os.path.isdir(v1)                              # kept...
+    assert not os.path.exists(os.path.join(v1, "_COMMITTED"))  # ...unrecorded
+    assert resolve_units(live) == [live]                  # never read
+    assert read_units(spark, live).count() == 1024        # live untouched
 
-    # crash between the renames: reproduce the state manually
-    zorder_layout(spark.read.parquet(live), ["a", "b"], live + ".compact",
-                  bits=4, num_files=2)
-    os.rename(live, live + ".retired")
-    assert not os.path.exists(live)
-    # recovery A: rename the old table back
-    os.rename(live + ".retired", live)
-    assert nrows(live) == before_rows
-    # recovery B: promote the new table instead
-    os.rename(live, live + ".retired")
-    os.rename(live + ".compact", live)
-    assert nrows(live) == before_rows
-    shutil.rmtree(live + ".retired")
-
-    # a fresh compact over the recovered table completes and cleans up
+    # the retried compact vacuums the unrecorded unit and completes
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
                             spark=spark)
-    assert nrows(live) == before_rows
-    assert not os.path.exists(live + ".compact")
-    assert not os.path.exists(live + ".retired")
+    assert resolve_units(live) == [v1]
+    assert os.path.isfile(os.path.join(v1, "_COMMITTED"))
+    assert read_units(spark, live).count() == 1024
+    assert not [n for n in os.listdir(live) if n.endswith(".parquet")]
+
+    # crash before cleanup: a fresh flat table compacted while every
+    # delete silently fails keeps its flat files next to the new unit
+    live2 = str(tmp_path / "t2")
+    zorder_layout(df, ["a", "b"], live2, bits=4, num_files=2)
+    flat2 = sorted(n for n in os.listdir(live2) if n.endswith(".parquet"))
+    real_delete = mod._delete_tree
+    mod._delete_tree = lambda p, spark_: None
+    try:
+        compact_clustered_table(live2, ["a", "b"], bits=4, num_files=2,
+                                spark=spark)
+    finally:
+        mod._delete_tree = real_delete
+    assert sorted(
+        n for n in os.listdir(live2) if n.endswith(".parquet")
+    ) == flat2
+    assert resolve_units(live2) == [os.path.join(live2, "_versions",
+                                                 "v_000001")]
+    assert read_units(spark, live2).count() == 1024     # not 2048
+    assert vacuum_units(live2, spark) == flat2
+    assert read_units(spark, live2).count() == 1024
+    assert not [n for n in os.listdir(live2) if n.endswith(".parquet")]
 
 
 def test_zorder_key_nan_top_bin(spark):
@@ -556,7 +565,7 @@ def test_auto_bits_matches_measured_optima():
 # (1) the bits-sizing law is the DEFAULT, and the default beats bits=8;
 # (2) auto_bits can be capped to the Hilbert lookup budget;
 # (3) the helper-column collision guard;
-# (4) the object-store-safe manifest swap regime;
+# (4) the versioned-unit compact lifecycle;
 # (5) DATE-typed stats in layout_scan_fraction.
 
 
@@ -689,14 +698,16 @@ def test_scan_fraction_handles_date_columns(spark, tmp_path):
 
 
 def test_manifest_compact_swap_and_resolve(spark, tmp_path):
-    """swap="manifest": promotion is one small pointer update, data
-    directories are immutable versioned units, readers resolve through
-    resolve_clustered_table, and a raw read of the root fails loudly
-    instead of returning stale data."""
+    """A compact commits a new versioned unit with one record PUT and
+    renames nothing; readers resolve through resolve_units; a raw read
+    of the root fails loudly instead of returning stale data; and each
+    compact keeps the unit it replaced until the NEXT compact's vacuum
+    (or an explicit one) removes it."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
-        read_clustered_table,
-        resolve_clustered_table,
+        read_units,
+        resolve_units,
+        vacuum_units,
     )
 
     live = str(tmp_path / "t")
@@ -709,54 +720,51 @@ def test_manifest_compact_swap_and_resolve(spark, tmp_path):
     e = zorder_layout(half, ["a", "b"], live, bits=4, num_files=2, mode="append")
     zorder_layout(rest, ["a", "b"], live, bits=4, num_files=2,
                   mode="append", edges=e)
-    assert resolve_clustered_table(live) == live  # flat until compacted
+    assert resolve_units(live) == [live]  # flat until compacted
 
-    compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
-    v1 = resolve_clustered_table(live)
+    def compact():
+        compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
+                                spark=spark)
+        (unit,) = resolve_units(live)
+        assert read_units(spark, live).count() == 1024
+        return unit
+
+    v1 = compact()
     assert v1.endswith(os.path.join("_versions", "v_000001"))
-    assert read_clustered_table(spark, live).count() == 1024
+    assert os.path.isfile(os.path.join(v1, "_COMMITTED"))
     # flat files are gone: a raw read of the root fails loudly
     with pytest.raises(Exception):
         spark.read.parquet(live).collect()
 
-    # second compact: pointer moves to v_000002; v_000001 is retired
-    # but RETAINED (keep_versions=1 default — the in-flight-reader
-    # grace window); the explicit vacuum reclaims it
-    compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
-    v2 = resolve_clustered_table(live)
+    # second compact: v_000002 is live; v_000001 is RETAINED for
+    # in-flight readers
+    v2 = compact()
     assert v2.endswith("v_000002")
-    assert os.path.isdir(v1)                       # grace window
-    assert read_clustered_table(spark, live).count() == 1024
-    from aind_protein_data_transformation_spark.operators.layout import vacuum_clustered_table
-    removed = vacuum_clustered_table(live, spark)
-    assert removed == [v1]
-    assert not os.path.exists(v1)
-    assert read_clustered_table(spark, live).count() == 1024
-
-    # keep_versions=0 restores eager cleanup: the third compact removes
-    # v_000002 immediately
-    compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest", keep_versions=0)
-    assert resolve_clustered_table(live).endswith("v_000003")
+    assert os.path.isdir(v1)
+    # third compact: its vacuum removes v_000001, and v_000002 is kept
+    v3 = compact()
+    assert v3.endswith("v_000003")
+    assert not os.path.exists(v1) and os.path.isdir(v2)
+    # the explicit vacuum reclaims the retained unit
+    assert vacuum_units(live, spark) == ["_versions/v_000002"]
     assert not os.path.exists(v2)
-
-    with pytest.raises(ValueError, match="swap regime"):
-        compact_clustered_table(live, ["a"], spark=spark, swap="copy")
+    assert read_units(spark, live).count() == 1024
 
 
 def test_manifest_swap_crash_points_are_recoverable(spark, tmp_path):
-    """The manifest twin of the rename crash-point test: a lossy
-    compact raises at the verify BEFORE the pointer moves (live
-    resolution untouched, bad unit kept for inspection); a crash after
-    the version-dir write but before the pointer update leaves the old
-    unit live, and the RETRIED compact recomputes the same version
-    name and overwrites the orphan."""
+    """The crash points of a compact over an already-compacted table:
+    a lossy compact raises at the verify BEFORE the record, and its
+    unrecorded v_000002 never shadows the live v_000001 even though its
+    number is higher; the retried compact vacuums it and commits a
+    fresh v_000002; stale units next to the live one — a retained
+    committed one and an unrecorded one — are inert to readers and
+    removed by one vacuum."""
     import aind_protein_data_transformation_spark.operators.layout as mod
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
-        resolve_clustered_table,
+        read_units,
+        resolve_units,
+        vacuum_units,
     )
 
     live = str(tmp_path / "t")
@@ -764,8 +772,11 @@ def test_manifest_swap_crash_points_are_recoverable(spark, tmp_path):
         [Row(a=float(a), b=float(b)) for a in range(32) for b in range(32)]
     )
     zorder_layout(df, ["a", "b"], live, bits=4, num_files=2)
+    compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
+                            spark=spark)
+    (v1,) = resolve_units(live)
 
-    # ---- verify failure: pointer never written, live resolution flat
+    # ---- verify failure: no record, live resolution unchanged
     real_zorder_layout = mod.zorder_layout
 
     def lossy_zorder_layout(d, cols, out, **kw):
@@ -775,42 +786,42 @@ def test_manifest_swap_crash_points_are_recoverable(spark, tmp_path):
     try:
         with pytest.raises(RuntimeError, match="changed the row multiset"):
             compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                                    spark=spark, swap="manifest")
+                                    spark=spark)
     finally:
         mod.zorder_layout = real_zorder_layout
-    assert resolve_clustered_table(live) == live       # pointer untouched
-    assert spark.read.parquet(live).count() == 1024    # live data intact
-    bad_unit = os.path.join(live, "_versions", "v_000001")
+    bad_unit = os.path.join(live, "_versions", "v_000002")
     assert os.path.isdir(bad_unit)                     # kept for inspection
+    assert resolve_units(live) == [v1]                 # never read
+    assert read_units(spark, live).count() == 1024
 
-    # ---- crash before the pointer update: the bad/partial v_000001 is
-    # exactly that state; the retried compact recomputes v_000001 from
-    # the (absent) pointer and overwrites the orphan
+    # ---- the retry vacuums the unrecorded unit and commits afresh
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
-    assert resolve_clustered_table(live).endswith("v_000001")
-    from aind_protein_data_transformation_spark.operators.layout import read_clustered_table
-    assert read_clustered_table(spark, live).count() == 1024
+                            spark=spark)
+    assert resolve_units(live) == [bad_unit]
+    assert read_units(spark, live).count() == 1024
 
-    # ---- crash AFTER the pointer update but before old-unit cleanup:
-    # simulate by dropping an unreferenced stale unit next to the live
-    # one — readers resolve only through the pointer, so it is inert
+    # ---- stale units next to the live one are inert to readers
     stale = os.path.join(live, "_versions", "v_000000")
-    os.makedirs(stale, exist_ok=True)
-    assert resolve_clustered_table(live).endswith("v_000001")
-    assert read_clustered_table(spark, live).count() == 1024
+    os.makedirs(stale)
+    assert resolve_units(live) == [bad_unit]
+    assert read_units(spark, live).count() == 1024
+    assert vacuum_units(live, spark) == [
+        "_versions/v_000000", "_versions/v_000001"
+    ]
+    assert read_units(spark, live).count() == 1024
 
 
 def test_append_after_manifest_compact_stays_visible(spark, tmp_path):
-    """The ingest→compact→ingest lifecycle under the manifest regime:
-    zorder_layout(mode="append") routes post-compact batches into the
-    LIVE versioned unit (not the root, where resolved readers would
-    never see them), layout_scan_fraction measures the live unit, and
-    a second compact folds the appended rows into the next version."""
+    """The ingest→compact→ingest lifecycle: zorder_layout(mode="append")
+    routes post-compact batches into the LIVE versioned unit (not the
+    root, where resolved readers would never see them),
+    layout_scan_fraction measures the live unit, a second compact
+    folds the appended rows into the next version, and an overwrite
+    starts a fresh flat table."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
-        read_clustered_table,
-        resolve_clustered_table,
+        read_units,
+        resolve_units,
     )
 
     df = spark.createDataFrame(
@@ -824,27 +835,35 @@ def test_append_after_manifest_compact_stays_visible(spark, tmp_path):
     e = zorder_layout(first, ["a", "b"], live, bits=4, num_files=2,
                       mode="append")
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
-    v1 = resolve_clustered_table(live)
+                            spark=spark)
+    (v1,) = resolve_units(live)
 
     # post-compact appends land in the live unit, visible to readers
     zorder_layout(second, ["a", "b"], live, bits=4, num_files=2,
                   mode="append", edges=e)
     zorder_layout(third, ["a", "b"], live, bits=4, num_files=2,
                   mode="append", edges=e)
-    assert read_clustered_table(spark, live).count() == 1024
+    assert read_units(spark, live).count() == 1024
     # scan geometry measures the live unit (no double-count of units)
     geo = layout_scan_fraction(live, {"a": (None, None), "b": (None, None)})
     assert geo["rows"] == 1024
 
     # second compact folds the appended rows into v_000002; v_000001
-    # stays for the retention window (keep_versions=1 default) and the
-    # live read is unaffected by its presence
+    # stays until the next compact and the live read is unaffected
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
-    assert resolve_clustered_table(live).endswith("v_000002")
+                            spark=spark)
+    assert resolve_units(live)[0].endswith("v_000002")
     assert os.path.isdir(v1)
-    assert read_clustered_table(spark, live).count() == 1024
+    assert read_units(spark, live).count() == 1024
+    assert layout_scan_fraction(
+        live, {"a": (None, None), "b": (None, None)}
+    )["rows"] == 1024
+
+    # an overwrite replaces the whole table, versions included: no
+    # committed version can resurface behind the new flat files
+    zorder_layout(first, ["a", "b"], live, bits=4, num_files=2)
+    assert resolve_units(live) == [live]
+    assert read_units(spark, live).count() == 512
 
 
 def test_string_surrogate_preserves_byte_order(spark):
@@ -942,18 +961,19 @@ def test_scan_fraction_predicts_spark_reader_on_strings(spark, tmp_path):
 
 
 def test_manifest_swap_through_hadoop_filesystem_branch(spark, tmp_path):
-    """The scheme-portable half of the manifest regime, exercised live:
-    the pointer protocol dispatches on the path SCHEME (layout.py
-    ``_use_local_fs`` — never by probing the driver's local disk), and
-    an explicit ``file:`` URI with a session routes pointer
-    read/commit, garbage delete, and the root sweep through the Hadoop
-    FileSystem — the same code an s3a:// table would run, minus the
-    network."""
+    """The scheme-portable table lifecycle, exercised live: storage
+    operations dispatch on the path SCHEME (layout.py ``_use_local_fs``
+    — never by probing the driver's local disk), and an explicit
+    ``file:`` URI with a session routes the listings, the record
+    probes, the ``_COMMITTED`` create, the root sweep and the vacuum
+    deletes through the Hadoop FileSystem — the same code an s3a:// or
+    hdfs:// table runs, minus the network. The default compact
+    renames nothing, so it needs no rename support from the store."""
     from aind_protein_data_transformation_spark.operators.layout import (
-        _read_pointer,
         compact_clustered_table,
-        read_clustered_table,
-        resolve_clustered_table,
+        read_units,
+        resolve_units,
+        vacuum_units,
     )
 
     local_root = tmp_path / "t"
@@ -962,83 +982,47 @@ def test_manifest_swap_through_hadoop_filesystem_branch(spark, tmp_path):
         [Row(a=float(a), b=float(b)) for a in range(32) for b in range(32)]
     )
     zorder_layout(df, ["a", "b"], uri, bits=4, num_files=2)
-    assert _read_pointer(uri, spark) is None
+    assert resolve_units(uri, spark) == [uri]
 
-    compact_clustered_table(uri, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
-    # pointer readable only through the Hadoop branch (no local file
-    # at the literal URI string), resolution + read work end to end
-    assert _read_pointer(uri, spark) == "v_000001"
-    assert resolve_clustered_table(uri, spark=spark).endswith("v_000001")
-    assert read_clustered_table(spark, uri).count() == 1024
+    def compact():
+        compact_clustered_table(uri, ["a", "b"], bits=4, num_files=2,
+                                spark=spark)
+        assert read_units(spark, uri).count() == 1024
+
+    compact()
+    # the record landed through fs.create at the real local path, and
+    # resolution works end to end through the Hadoop listing
+    assert (local_root / "_versions" / "v_000001" / "_COMMITTED").exists()
+    assert resolve_units(uri, spark) == [
+        os.path.join(uri, "_versions", "v_000001")
+    ]
     # the flat DATA files were swept through the Hadoop delete;
     # non-data residue (_SUCCESS, .crc) may remain but no parquet does
     assert not [n for n in os.listdir(local_root) if n.endswith(".parquet")]
-    assert "_versions" in os.listdir(local_root)
 
-    # second compact through the same branch: commit overwrites the
-    # pointer via fs.create(overwrite) and retires v_000001
-    # (keep_versions=0 so the retired-unit delete itself exercises the
-    # Hadoop branch too)
-    compact_clustered_table(uri, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest", keep_versions=0)
-    assert _read_pointer(uri, spark) == "v_000002"
+    # the third compact's vacuum deletes v_000001 through Hadoop; the
+    # explicit vacuum then reclaims the retained v_000002 the same way
+    compact()
+    assert (local_root / "_versions" / "v_000001").exists()   # retained
+    compact()
     assert not (local_root / "_versions" / "v_000001").exists()
-    assert read_clustered_table(spark, uri).count() == 1024
-
-    # third compact with the retention default, then an explicit vacuum
-    # — both resolving, listing, and deleting through the Hadoop branch
-    from aind_protein_data_transformation_spark.operators.layout import vacuum_clustered_table
-    compact_clustered_table(uri, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
-    assert (local_root / "_versions" / "v_000002").exists()   # retained
-    removed = vacuum_clustered_table(uri, spark)
-    assert [os.path.basename(p) for p in removed] == ["v_000002"]
+    assert vacuum_units(uri, spark) == ["_versions/v_000002"]
     assert not (local_root / "_versions" / "v_000002").exists()
-    assert read_clustered_table(spark, uri).count() == 1024
-
-
-def test_blank_pointer_fails_loudly_never_multi_unit(spark, tmp_path):
-    """An empty _CURRENT (mid-commit / crashed-commit state on stores
-    without atomic small-file replace) must resolve as if no pointer
-    existed — loud downstream failure — NEVER as an empty version name,
-    which would join to _versions/ itself and silently read EVERY unit
-    at once (duplicate rows)."""
-    from aind_protein_data_transformation_spark.operators.layout import (
-        _read_pointer,
-        compact_clustered_table,
-        resolve_clustered_table,
-    )
-
-    live = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [Row(a=float(a), b=float(b)) for a in range(16) for b in range(16)]
-    )
-    zorder_layout(df, ["a", "b"], live, bits=3, num_files=2)
-    compact_clustered_table(live, ["a", "b"], bits=3, num_files=2,
-                            spark=spark, swap="manifest")
-    pointer = os.path.join(live, "_versions", "_CURRENT")
-    with open(pointer, "w") as f:
-        f.write("")  # simulate the crashed-commit state
-
-    assert _read_pointer(live, spark) is None
-    assert resolve_clustered_table(live) == live  # root, not _versions/
-    # and the root holds no data files, so the read fails LOUDLY
-    with pytest.raises(Exception):
-        spark.read.parquet(resolve_clustered_table(live)).collect()
+    assert read_units(spark, uri).count() == 1024
 
 
 def test_manifest_sweep_preserves_caller_sidecars(spark, tmp_path):
-    """The post-commit root sweep removes stale DATA files only: a
+    """The first compact's root sweep removes stale DATA files only: a
     caller-persisted sidecar next to the data (the edge snapshot the
     zorder_layout docstring invites — HIDDEN-named per the Spark
     sidecar convention, or any flat read would parse it as parquet)
-    survives every compact."""
+    survives every compact and vacuum."""
     import json
 
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
-        read_clustered_table,
+        read_units,
+        vacuum_units,
     )
 
     live = str(tmp_path / "t")
@@ -1052,27 +1036,27 @@ def test_manifest_sweep_preserves_caller_sidecars(spark, tmp_path):
 
     for _ in range(2):
         compact_clustered_table(live, ["a", "b"], bits=3, num_files=2,
-                                spark=spark, swap="manifest")
-    assert os.path.isfile(sidecar)          # sidecar survived both sweeps
+                                spark=spark)
+    vacuum_units(live, spark)
+    assert os.path.isfile(sidecar)          # sidecar survived every sweep
     with open(sidecar) as f:
         assert json.load(f) == edges
     # while the stale flat DATA files are gone
     assert not [n for n in os.listdir(live) if n.endswith(".parquet")]
-    assert read_clustered_table(spark, live).count() == 256
+    assert read_units(spark, live).count() == 256
 
 
 def test_manifest_retention_keeps_in_flight_reader_alive(spark, tmp_path):
-    """The reader-vs-cleanup boundary (VERDICT round 13 #2): a
-    DataFrame resolved against the pre-compact live unit still
-    collects correctly AFTER a compact promotes the next version —
-    keep_versions=1 (the default) retains the immediately-previous
-    unit exactly for that reader. The explicit vacuum then reclaims
-    it, after which the stale plan fails LOUDLY (missing files), never
+    """The reader-vs-cleanup boundary: a DataFrame resolved against the
+    pre-compact live unit still collects correctly AFTER a compact
+    commits the next version — each compact keeps the unit it replaced
+    exactly for that reader. The explicit vacuum then reclaims it,
+    after which the stale plan fails LOUDLY (missing files), never
     silently wrong."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
-        resolve_clustered_table,
-        vacuum_clustered_table,
+        resolve_units,
+        vacuum_units,
     )
 
     live = str(tmp_path / "t")
@@ -1081,63 +1065,65 @@ def test_manifest_retention_keeps_in_flight_reader_alive(spark, tmp_path):
     )
     zorder_layout(df, ["a", "b"], live, bits=4, num_files=2)
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
-    v1 = resolve_clustered_table(live)
+                            spark=spark)
+    (v1,) = resolve_units(live)
 
     # the in-flight reader: resolved v_000001, scan not yet finished
     reader = spark.read.parquet(v1)
 
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
-    assert resolve_clustered_table(live).endswith("v_000002")
+                            spark=spark)
+    assert resolve_units(live)[0].endswith("v_000002")
     # the pre-compact reader finishes its scan against the retained unit
     assert reader.count() == 1024
     assert reader.agg(F.sum("a")).collect()[0][0] == 32 * sum(range(32))
 
     # explicit vacuum reclaims the retained unit; the stale reader now
     # fails loudly on its next action
-    assert vacuum_clustered_table(live, spark) == [v1]
+    assert vacuum_units(live, spark) == ["_versions/v_000001"]
     with pytest.raises(Exception):
         spark.read.parquet(v1).collect()
     # fresh resolution is unaffected
-    fresh = spark.read.parquet(resolve_clustered_table(live))
+    fresh = spark.read.parquet(*resolve_units(live))
     assert fresh.count() == 1024
 
 
-def test_vacuum_respects_keep_versions_and_flat_noop(spark, tmp_path):
-    """vacuum(keep_versions=k) keeps the k newest retired units;
-    vacuum on a never-manifest-compacted table is a no-op."""
+def test_vacuum_units_is_a_noop_on_live_only_stores(spark, tmp_path):
+    """vacuum_units deletes only dead units: on a flat table, a
+    never-folded lake, a missing path, or a compacted table whose
+    replaced unit is already gone it deletes and reports nothing."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
-        resolve_clustered_table,
-        vacuum_clustered_table,
+        resolve_units,
+        vacuum_units,
     )
 
-    live = str(tmp_path / "t")
     df = spark.createDataFrame(
         [Row(a=float(a), b=float(b)) for a in range(16) for b in range(16)]
     )
+    live = str(tmp_path / "t")
     zorder_layout(df, ["a", "b"], live, bits=3, num_files=2)
-    assert vacuum_clustered_table(live, spark) == []  # flat: no-op
+    before = sorted(os.listdir(live))
+    assert vacuum_units(live, spark) == []               # flat table
+    assert sorted(os.listdir(live)) == before
 
-    # three compacts with an unbounded window: v1 and v2 both retained
-    for _ in range(3):
-        compact_clustered_table(live, ["a", "b"], bits=3, num_files=2,
-                                spark=spark, swap="manifest",
-                                keep_versions=10)
-    assert resolve_clustered_table(live).endswith("v_000003")
-    vroot = os.path.join(live, "_versions")
-    assert os.path.isdir(os.path.join(vroot, "v_000001"))
-    assert os.path.isdir(os.path.join(vroot, "v_000002"))
+    lake = str(tmp_path / "lake")
+    for i in range(2):
+        zorder_layout(df.filter(F.col("a") % 2 == i), ["a", "b"],
+                      f"{lake}/batch={i}", bits=3, num_files=1)
+    assert vacuum_units(lake, spark) == []               # never folded
+    assert len(resolve_units(lake, spark)) == 2
 
-    # keep the newest retired unit (v2), reclaim the older (v1)
-    removed = vacuum_clustered_table(live, spark, keep_versions=1)
-    assert removed == [os.path.join(vroot, "v_000001")]
-    assert os.path.isdir(os.path.join(vroot, "v_000002"))
+    assert vacuum_units(str(tmp_path / "missing"), spark) == []
+
+    compact_clustered_table(live, ["a", "b"], bits=3, num_files=2,
+                            spark=spark)
+    assert vacuum_units(live, spark) == []               # nothing retained
+    assert resolve_units(live)[0].endswith("v_000001")
 
 
 def test_pointer_protocol_dispatches_on_scheme(spark, tmp_path):
-    """The pointer protocol picks local-vs-Hadoop by path SCHEME, never
+    """Storage dispatch picks local-vs-Hadoop by path SCHEME, never
     by probing the driver's local disk (ADVICE round 13): a remote
     scheme routes to the Hadoop FileSystem even when a same-named
     directory exists locally; scheme-less paths follow fs.defaultFS;
@@ -1171,82 +1157,27 @@ def test_remote_scheme_without_session_raises(tmp_path):
     """A remote-scheme path with NO spark session raises a clear
     ValueError at the dispatch point (ADVICE round 14): the old
     fallthrough crashed later with an opaque AttributeError inside
-    ``_hadoop_fs`` — or, for a reader, looked like 'no pointer here'."""
+    ``_hadoop_fs`` — or, for a reader, looked like an empty store."""
     from aind_protein_data_transformation_spark.operators.layout import (
         _use_local_fs,
         load_edge_snapshot,
-        resolve_clustered_table,
+        resolve_units,
     )
 
     with pytest.raises(ValueError, match="spark session required"):
         _use_local_fs("s3a://bucket/table", None)
     # and the public entry points surface the same message
     with pytest.raises(ValueError, match="spark session required"):
-        resolve_clustered_table("s3a://bucket/table")
+        resolve_units("s3a://bucket/table")
     with pytest.raises(ValueError, match="spark session required"):
         load_edge_snapshot("hdfs://nn/table")
 
 
-def test_ingest_fold_through_hadoop_filesystem_branch(spark, tmp_path):
-    """The batch-keyed ingest fold over an explicit ``file:`` URI with
-    a session: unit listing, the per-folded-unit marker existence
-    probe, the ``_FOLD_COMMITTED`` PUT, the promote rename, the
-    edge-snapshot read, and the retained-generation deletes all route
-    through the Hadoop FileSystem — the same code an s3a:// lake would
-    run, minus the network."""
+def _hadoop_lake(spark, tmp_path):
+    """A three-unit batch lake addressed by an explicit ``file:`` URI
+    (so every lifecycle step takes the Hadoop FileSystem branch), with
+    its edge snapshot saved through the Hadoop write branch."""
     from aind_protein_data_transformation_spark.operators.layout import (
-        compact_ingest_units,
-        read_ingest_lake,
-        repair_ingest_units,
-        resolve_ingest_units,
-        save_edge_snapshot,
-    )
-
-    local_root = tmp_path / "lake"
-    uri = "file:" + str(local_root)
-    df = spark.createDataFrame(
-        [Row(a=float(a), b=float(b)) for a in range(32) for b in range(32)]
-    )
-    edges = None
-    for i in range(3):
-        edges = zorder_layout(
-            df.filter((F.col("a").cast("int") % 3) == i), ["a", "b"],
-            f"{uri}/batch={i}", bits=4, num_files=1, mode="overwrite",
-            edges=edges,
-        )
-    save_edge_snapshot(uri, edges, spark)      # Hadoop write branch
-
-    assert [os.path.basename(u) for u in resolve_ingest_units(uri, spark)] \
-        == ["batch=0", "batch=1", "batch=2"]
-    report = compact_ingest_units(uri, ["a", "b"], spark, bits=4,
-                                  num_files=1, keep_last=1)
-    assert report["folded"] == 2 and report["unit"] == "batch=c0-1"
-    assert report["edges"] == edges            # snapshot read via Hadoop
-    # the commit marker landed through fs.create at the real local path
-    assert (local_root / "batch=c0-1" / "_FOLD_COMMITTED").exists()
-    # resolver: live units exclude the retained originals
-    assert [os.path.basename(u) for u in resolve_ingest_units(uri, spark)] \
-        == ["batch=c0-1", "batch=2"]
-    assert read_ingest_lake(spark, uri).count() == 1024
-    # reclaim through the Hadoop delete branch
-    assert repair_ingest_units(uri, spark) == ["batch=0", "batch=1"]
-    assert not (local_root / "batch=0").exists()
-    assert read_ingest_lake(spark, uri).count() == 1024
-
-
-def test_ingest_fold_direct_promote_through_hadoop_branch(spark, tmp_path):
-    """``promote="direct"`` over an explicit ``file:`` URI — the regime
-    prescribed for object stores running the same Hadoop FileSystem
-    code an s3a:// lake would, with ZERO renames asserted: the folded
-    unit is written straight to its marker-gated final name, the
-    ``_FOLD_COMMITTED`` PUT goes through ``fs.create``, and the
-    ``_rename`` helper is never invoked (monkeypatch-asserted), so on a
-    real object store no per-object copy ever happens."""
-    import aind_protein_data_transformation_spark.operators.layout as lm
-    from aind_protein_data_transformation_spark.operators.layout import (
-        compact_ingest_units,
-        read_ingest_lake,
-        resolve_ingest_units,
         save_edge_snapshot,
     )
 
@@ -1263,21 +1194,91 @@ def test_ingest_fold_direct_promote_through_hadoop_branch(spark, tmp_path):
             edges=edges,
         )
     save_edge_snapshot(uri, edges, spark)
+    return local_root, uri, edges
 
+
+def test_ingest_fold_through_hadoop_filesystem_branch(spark, tmp_path):
+    """The batch-keyed ingest fold over an explicit ``file:`` URI with
+    a session: unit listing, the per-folded-unit record probe, the
+    ``_COMMITTED`` create, the edge-snapshot read, and the
+    retained-generation deletes all route through the Hadoop
+    FileSystem — the same code an s3a:// lake would run, minus the
+    network."""
+    from aind_protein_data_transformation_spark.operators.layout import (
+        compact_ingest_units,
+        read_units,
+        resolve_units,
+        vacuum_units,
+    )
+
+    local_root, uri, edges = _hadoop_lake(spark, tmp_path)
+    assert [os.path.basename(u) for u in resolve_units(uri, spark)] \
+        == ["batch=0", "batch=1", "batch=2"]
+    report = compact_ingest_units(uri, ["a", "b"], spark, bits=4,
+                                  num_files=1, keep_last=1)
+    assert report["folded"] == 2 and report["unit"] == "batch=c0-1"
+    assert report["edges"] == edges            # snapshot read via Hadoop
+    # the commit record landed through fs.create at the real local path
+    assert (local_root / "batch=c0-1" / "_COMMITTED").exists()
+    # resolver: live units exclude the retained originals
+    assert [os.path.basename(u) for u in resolve_units(uri, spark)] \
+        == ["batch=c0-1", "batch=2"]
+    assert read_units(spark, uri).count() == 1024
+    # reclaim through the Hadoop delete branch
+    assert vacuum_units(uri, spark) == ["batch=0", "batch=1"]
+    assert not (local_root / "batch=0").exists()
+    assert read_units(spark, uri).count() == 1024
+
+
+def test_ingest_fold_direct_promote_through_hadoop_branch(spark, tmp_path):
+    """The fold writes its unit straight to the final
+    ``batch=c<lo>-<hi>`` name and commits with the record create, so
+    over the Hadoop FileSystem branch (the code an s3a:// lake runs)
+    ``_rename`` is never invoked (monkeypatch-asserted): on a real
+    object store no per-object copy ever happens."""
+    import aind_protein_data_transformation_spark.operators.layout as lm
+    from aind_protein_data_transformation_spark.operators.layout import (
+        compact_ingest_units,
+        read_units,
+        resolve_units,
+    )
+
+    local_root, uri, _ = _hadoop_lake(spark, tmp_path)
     real_rename = lm._rename
 
     def forbid(src, dst, spark_):
-        raise AssertionError(f"direct promote must not rename ({src})")
+        raise AssertionError(f"the fold must not rename ({src})")
 
     lm._rename = forbid
     try:
         report = compact_ingest_units(uri, ["a", "b"], spark, bits=4,
-                                      num_files=1, keep_last=1,
-                                      promote="direct")
+                                      num_files=1, keep_last=1)
     finally:
         lm._rename = real_rename
     assert report["folded"] == 2 and report["unit"] == "batch=c0-1"
-    assert (local_root / "batch=c0-1" / "_FOLD_COMMITTED").exists()
-    assert [os.path.basename(u) for u in resolve_ingest_units(uri, spark)] \
+    assert (local_root / "batch=c0-1" / "_COMMITTED").exists()
+    assert [os.path.basename(u) for u in resolve_units(uri, spark)] \
         == ["batch=c0-1", "batch=2"]
-    assert read_ingest_lake(spark, uri).count() == 1024
+    assert read_units(spark, uri).count() == 1024
+
+
+def test_scan_fraction_measures_only_live_units_of_a_folded_lake(
+    spark, tmp_path
+):
+    """layout_scan_fraction walks only resolve_units(path): right after
+    a fold, before any vacuum, the retained generation sits on disk
+    next to the folded unit, and the footer geometry must still count
+    every landed row exactly once."""
+    from aind_protein_data_transformation_spark.operators.layout import (
+        compact_ingest_units,
+    )
+
+    local_root, _, _ = _hadoop_lake(spark, tmp_path)
+    lake = str(local_root)
+    box = {"a": (None, None), "b": (None, None)}
+    assert layout_scan_fraction(lake, box)["rows"] == 1024
+    report = compact_ingest_units(lake, ["a", "b"], spark, bits=4,
+                                  num_files=1, keep_last=1)
+    assert report["retired"] == ["batch=0", "batch=1"]
+    assert os.path.isdir(os.path.join(lake, "batch=0"))   # retained
+    assert layout_scan_fraction(lake, box)["rows"] == 1024

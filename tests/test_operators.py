@@ -388,7 +388,7 @@ def test_ivf_topk_verify_batch_identical(spark, sf_dir):
         .toString()
     )
     assert "EvalPython" not in auto_plan
-    # a calibrated threshold (calibrate_dispatch output) overrides the
+    # a re-measured threshold (BENCH.md round-8 ladder) overrides the
     # module constant: pair_min_dim at/below the fixture dim flips the
     # auto dispatch to the Arrow verify stage
     calibrated_plan = (

@@ -686,43 +686,84 @@ def test_zorder_key_matches_python_twin_property(spark, data):
 
 
 # --------------------------------------------------------------------
-# Ingest-lake fold lifecycle: model-based property over the REAL span
-# algebra (layout._ingest_unit_span / _subsumed_units — the functions
-# the resolver and repair run). Simulates every reachable lifecycle
-# state — land, at-least-once replay of the newest id, committed fold,
-# fold crashed before its _FOLD_COMMITTED marker, explicit repair,
-# and (round 16) repairs whose best-effort deletes SILENTLY FAIL for
-# an arbitrary subset of dead units (the real _delete_tree is
-# rmtree(ignore_errors)/except-pass) — and checks the two invariants
-# that make the lake correct at any scale: the resolver reads every
-# landed row exactly once (no loss, no duplicates), and live unit
-# spans are pairwise disjoint. A fold whose own repair left survivors
-# REFUSES (mirrors compact_ingest_units' raise): folding over a
-# surviving retired unit would double-count its rows.
+# Storage lifecycle: model-based property over the REAL resolver rule
+# (layout._split_units — the one function resolve_units and
+# vacuum_units run for both stores). Two model stores share one op
+# sequence. The ingest lake: land, at-least-once replay of the newest
+# id, committed fold, fold crashed before its _COMMITTED record. The
+# clustered table: append, compact, compact crashed before its record,
+# compact crashed before its flat-root cleanup. Both: explicit vacuum,
+# and vacuums whose best-effort deletes SILENTLY FAIL for an arbitrary
+# subset of dead units (the real _delete_tree is
+# rmtree(ignore_errors)/except-pass). After every op both stores must
+# read every row exactly once through the resolver (no loss, no
+# duplicates), and the lake's live spans must be pairwise disjoint. A
+# compact whose own vacuum left survivors REFUSES (mirrors
+# layout._vacuum_for_compact): folding over a surviving retired unit
+# would double-count its rows.
 
 from aind_protein_data_transformation_spark.operators.layout import (  # noqa: E402
     _ingest_unit_span,
-    _is_folded_name,
-    _subsumed_units,
+    _split_units,
+    _version_number,
 )
 
 
-class _LakeModel:
-    """Directory-name-level model of a batch-keyed ingest lake: each
-    unit maps to the SET of batch ids whose rows it contains."""
+def _crc(name: str, salt: int) -> int:
+    import zlib
+
+    return zlib.crc32(f"{salt}:{name}".encode())
+
+
+class _StoreModel:
+    """Directory-name-level model of one store: each unit name (a
+    table's flat root files included) maps to the SET of row ids it
+    holds; ``committed`` names the units whose record exists."""
 
     def __init__(self):
         self.units: dict[str, frozenset[int]] = {}
         self.committed: set[str] = set()
         self.next_id = 0
 
-    def _spans_committed(self):
-        return {
-            n: _ingest_unit_span(n)
-            for n in self.units
-            if not _is_folded_name(n) or n in self.committed
-        }
+    def split(self) -> tuple[list[str], list[str]]:
+        return _split_units(list(self.units), self.committed.__contains__)
 
+    def resolve(self) -> list[str]:
+        return self.split()[0]
+
+    def rows(self, name: str) -> frozenset[int]:
+        if name:
+            return self.units[name]
+        # the root unit of a never-compacted table: its flat files
+        return frozenset().union(
+            *(ids for n, ids in self.units.items() if n.endswith(".parquet"))
+        )
+
+    def write(self, name, rows, crash_before_record):
+        # a compact crashed before its record may have died mid-write:
+        # its unit then holds only part of the rows
+        assert name not in self.units  # the new unit cannot collide
+        if crash_before_record:
+            rows = frozenset(sorted(rows)[: len(rows) // 2])
+        else:
+            self.committed.add(name)
+        self.units[name] = rows
+
+    def vacuum(self, fail_salt=None):
+        # fail_salt models _delete_tree's silent best-effort failures:
+        # a deterministic arbitrary subset of the dead units survives
+        # its delete (crc32-keyed so hypothesis shrinks cleanly)
+        for n in self.split()[1]:
+            if fail_salt is not None and _crc(n, fail_salt) % 2:
+                continue  # delete silently failed; unit survives
+            del self.units[n]
+
+    def vacuum_for_compact(self, fail_salt) -> bool:
+        self.vacuum(fail_salt)
+        return not self.split()[1]
+
+
+class _LakeModel(_StoreModel):
     def land(self):
         self.units[f"batch={self.next_id}"] = frozenset({self.next_id})
         self.next_id += 1
@@ -734,78 +775,63 @@ class _LakeModel:
             i = self.next_id - 1
             self.units[f"batch={i}"] = frozenset({i})
 
-    def _dead(self):
-        spans = self._spans_committed()
-        return set(_subsumed_units(spans)) | {
-            n for n in self.units
-            if _is_folded_name(n) and n not in self.committed
-        }
-
-    def repair(self, fail_salt=None):
-        # fail_salt models _delete_tree's silent best-effort failures:
-        # a deterministic arbitrary subset of the dead units survives
-        # their delete (crc32-keyed so hypothesis shrinks cleanly)
-        for n in self._dead():
-            if fail_salt is not None and _crc(n, fail_salt) % 2:
-                continue  # delete silently failed; unit survives
-            del self.units[n]
-
-    def fold(self, keep_last, crash_before_marker, fail_salt=None):
-        self.repair(fail_salt)
-        if self._dead():
-            # compact_ingest_units re-lists and RAISES on any survivor
-            # of its repair sweep — nothing is written; model the
-            # refusal as a no-op so the invariants are checked on the
-            # unchanged lake
-            return
-        spans = self._spans_committed()
-        ordered = sorted(spans, key=lambda n: spans[n][1])
-        candidates = ordered[: max(0, len(ordered) - keep_last)]
+    def fold(self, keep_last, crash_before_record, fail_salt=None):
+        if not self.vacuum_for_compact(fail_salt):
+            return  # compact_ingest_units raises; nothing is written
+        live = self.resolve()
+        candidates = live[: max(0, len(live) - keep_last)]
         if len(candidates) < 2:
             return
-        lo = min(spans[n][0] for n in candidates)
-        hi = max(spans[n][1] for n in candidates)
-        name = f"batch=c{lo}-{hi}"
-        assert name not in self.units  # promote rename cannot collide
-        self.units[name] = frozenset().union(
-            *(self.units[n] for n in candidates)
-        )
-        if not crash_before_marker:
-            self.committed.add(name)
+        spans = [_ingest_unit_span(n) for n in candidates]
+        name = f"batch=c{min(s[0] for s in spans)}-{max(s[1] for s in spans)}"
+        self.write(name, frozenset().union(*map(self.rows, candidates)),
+                   crash_before_record)
         # the subsumed candidates are RETAINED (no deletes on fold)
 
-    def resolve(self):
-        spans = self._spans_committed()
-        dead = set(_subsumed_units(spans))
-        return [n for n in spans if n not in dead]
+
+class _TableModel(_StoreModel):
+    def append(self):
+        # zorder_layout(mode="append") lands in the live unit: a new
+        # flat file before the first compact, a new file inside the
+        # live version after it
+        i = self.next_id
+        self.next_id += 1
+        (live,) = self.resolve()
+        if live:
+            self.units[live] |= {i}
+        else:
+            self.units[f"part-{i}.parquet"] = frozenset({i})
+
+    def compact(self, crash_before_record, crash_before_cleanup,
+                fail_salt=None):
+        if not self.vacuum_for_compact(fail_salt):
+            return  # compact_clustered_table raises; nothing is written
+        (live,) = self.resolve()
+        name = f"_versions/v_{(_version_number(live) or 0) + 1:06d}"
+        self.write(name, self.rows(live), crash_before_record)
+        if live or crash_before_record or crash_before_cleanup:
+            return
+        for n in [n for n in self.units if n.endswith(".parquet")]:
+            if fail_salt is None or not _crc(n, fail_salt) % 2:
+                del self.units[n]  # the best-effort flat-root sweep
 
 
-def _crc(name: str, salt: int) -> int:
-    import zlib
-
-    return zlib.crc32(f"{salt}:{name}".encode())
-
+_salt = st.none() | st.integers(min_value=0, max_value=7)
 
 _ops = st.lists(
     st.one_of(
         st.just(("land",)),
         st.just(("replay",)),
-        st.just(("repair",)),
-        st.tuples(
-            st.just("repair_flaky"),
-            st.integers(min_value=0, max_value=7),
-        ),
+        st.tuples(st.just("vacuum"), _salt),
         st.tuples(
             st.just("fold"),
             st.integers(min_value=1, max_value=3),
             st.booleans(),
+            _salt,
         ),
-        st.tuples(
-            st.just("fold_flaky"),
-            st.integers(min_value=1, max_value=3),
-            st.booleans(),
-            st.integers(min_value=0, max_value=7),
-        ),
+        st.just(("append",)),
+        st.tuples(st.just("table_vacuum"), _salt),
+        st.tuples(st.just("compact"), st.booleans(), st.booleans(), _salt),
     ),
     min_size=1,
     max_size=40,
@@ -815,32 +841,35 @@ _ops = st.lists(
 @given(ops=_ops)
 @settings(max_examples=500, deadline=None)
 def test_fold_lifecycle_reads_every_row_exactly_once(ops):
-    m = _LakeModel()
+    lake, table = _LakeModel(), _TableModel()
     for op in ops:
         if op[0] == "land":
-            m.land()
+            lake.land()
         elif op[0] == "replay":
-            m.replay_newest()
-        elif op[0] == "repair":
-            m.repair()
-        elif op[0] == "repair_flaky":
-            m.repair(fail_salt=op[1])
-        elif op[0] == "fold_flaky":
-            m.fold(keep_last=op[1], crash_before_marker=op[2],
-                   fail_salt=op[3])
+            lake.replay_newest()
+        elif op[0] == "vacuum":
+            lake.vacuum(fail_salt=op[1])
+        elif op[0] == "fold":
+            lake.fold(keep_last=op[1], crash_before_record=op[2],
+                      fail_salt=op[3])
+        elif op[0] == "append":
+            table.append()
+        elif op[0] == "table_vacuum":
+            table.vacuum(fail_salt=op[1])
         else:
-            m.fold(keep_last=op[1], crash_before_marker=op[2])
-        live = m.resolve()
-        # exactly-once: live unit contents are disjoint and their union
-        # is every id ever landed — in EVERY intermediate state
-        seen: set[int] = set()
-        for n in live:
-            ids = m.units[n]
-            assert not (seen & ids), f"duplicate rows via {n}"
-            seen |= ids
-        assert seen == set(range(m.next_id)), "resolver lost rows"
-        # live spans pairwise disjoint (nested-or-disjoint collapses
+            table.compact(crash_before_record=op[1],
+                          crash_before_cleanup=op[2], fail_salt=op[3])
+        for m in (lake, table):
+            # exactly-once: live unit contents are disjoint and their
+            # union is every id ever landed — in EVERY intermediate state
+            seen: set[int] = set()
+            for n in m.resolve():
+                ids = m.rows(n)
+                assert not (seen & ids), f"duplicate rows via {n!r}"
+                seen |= ids
+            assert seen == set(range(m.next_id)), "resolver lost rows"
+        # live lake spans pairwise disjoint (nested-or-disjoint collapses
         # to disjoint once contained units are filtered)
-        spans = sorted(_ingest_unit_span(n) for n in live)
+        spans = sorted(_ingest_unit_span(n) for n in lake.resolve() if n)
         for (alo, ahi), (blo, bhi) in zip(spans, spans[1:]):
             assert ahi < blo, f"overlapping live spans {spans}"

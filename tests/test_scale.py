@@ -729,8 +729,7 @@ def test_materialize_mode_switch(spark, tmp_path, monkeypatch):
     local (default) = localCheckpoint: lineage truncated, unreplicated
     blocks (executor loss kills the query — fine single-JVM). reliable
     = checkpoint() into a durable dir: files on shared storage, loss
-    transparent. replicated = persist(MEMORY_AND_DISK_2): replica +
-    retained lineage. Unknown modes and reliable-without-a-dir raise
+    transparent. Unknown modes and reliable-without-a-dir raise
     contract errors instead of silently degrading durability."""
     import pytest
 
@@ -757,11 +756,6 @@ def test_materialize_mode_switch(spark, tmp_path, monkeypatch):
     import os as _os
     assert glob.glob(_os.path.join(ckdir.replace("file:", ""), "**", "rdd-*"),
                      recursive=True), "reliable mode must write durable files"
-
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "replicated")
-    rep = materialize(df)
-    assert rep.storageLevel.replication == 2 and rep.storageLevel.useDisk
-    rep.unpersist()
 
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "bogus")
     with pytest.raises(ValueError, match="bogus"):

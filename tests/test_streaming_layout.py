@@ -246,12 +246,12 @@ def test_compact_ingest_units_folds_and_preserves(spark, split_sf_dir, tmp_path)
     one re-clustered unit preserves the resolver-read multiset exactly,
     keeps the hot tail untouched, names the folded unit by its id
     range, RETAINS the subsumed units for one generation (the next
-    call's repair deletes them), and reuses the persisted edge snapshot
+    call's vacuum deletes them), and reuses the persisted edge snapshot
     (no new sketch)."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_ingest_units,
         load_edge_snapshot,
-        read_ingest_lake,
+        read_units,
         save_edge_snapshot,
     )
 
@@ -301,21 +301,21 @@ def test_compact_ingest_units_folds_and_preserves(spark, split_sf_dir, tmp_path)
     names = sorted(n for n in os.listdir(lake) if n.startswith("batch="))
     assert names == ["batch=0", "batch=1", "batch=2", "batch=3",
                      "batch=c0-2"]
-    assert fp(read_ingest_lake(spark, lake)) == before
+    assert fp(read_units(spark, lake)) == before
 
-    # fewer than 2 candidates: no fold, but the repair pass sweeps the
+    # fewer than 2 candidates: no fold, but the vacuum sweeps the
     # retired generation (the deferred deletes land HERE)
     report2 = compact_ingest_units(lake, cols, spark, bits=5, keep_last=1)
     assert report2["folded"] == 0 and report2["unit"] is None
-    assert report2["repaired"] == ["batch=0", "batch=1", "batch=2"]
+    assert report2["vacuumed"] == ["batch=0", "batch=1", "batch=2"]
     names = sorted(n for n in os.listdir(lake) if n.startswith("batch="))
     assert names == ["batch=3", "batch=c0-2"]
-    assert fp(read_ingest_lake(spark, lake)) == before
+    assert fp(read_units(spark, lake)) == before
 
     # a later fold subsumes the earlier folded unit + the matured tail
     zorder_layout(batches[0].limit(40), cols, f"{lake}/batch=4",
                   bits=5, num_files=1, mode="overwrite", edges=edges)
-    before2 = fp(read_ingest_lake(spark, lake))
+    before2 = fp(read_units(spark, lake))
     report3 = compact_ingest_units(lake, cols, spark, bits=5,
                                    num_files=1, keep_last=1)
     assert report3["folded"] == 2              # c0-2 + batch=3
@@ -323,20 +323,21 @@ def test_compact_ingest_units_folds_and_preserves(spark, split_sf_dir, tmp_path)
     assert report3["retired"] == ["batch=c0-2", "batch=3"]
     names = sorted(n for n in os.listdir(lake) if n.startswith("batch="))
     assert names == ["batch=3", "batch=4", "batch=c0-2", "batch=c0-3"]
-    assert fp(read_ingest_lake(spark, lake)) == before2
+    assert fp(read_units(spark, lake)) == before2
 
 
 def test_compact_ingest_units_repairs_crash_leftovers(spark, split_sf_dir, tmp_path):
-    """A promote that crashed BEFORE its commit marker (mid-copy on an
-    object store, or between rename and marker) leaves a marker-less
-    folded unit next to the fully-live originals. The resolver never
-    reads it, and the next call's repair deletes exactly it (lossless —
+    """A fold that crashed BEFORE its commit record (mid-write on an
+    object store, or between the last data object and the record)
+    leaves an unrecorded folded unit next to the fully-live originals.
+    The resolver never reads it, and the next call's vacuum deletes
+    exactly it (lossless —
     every original is still live) before re-folding; the retry
     converges to a committed fold of the same span."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_ingest_units,
-        read_ingest_lake,
-        resolve_ingest_units,
+        read_units,
+        resolve_units,
     )
 
     lake = str(tmp_path / "lake")
@@ -364,42 +365,42 @@ def test_compact_ingest_units_repairs_crash_leftovers(spark, split_sf_dir, tmp_p
     one_copy = fp(spark.read.parquet(f"{lake}/batch=*"))
 
     # simulate the crash state: the fold of batches 0-1 completed its
-    # data copy but died before writing the _FOLD_COMMITTED marker
+    # data write but died before creating the _COMMITTED record
     union01 = spark.read.parquet(f"{lake}/batch=0", f"{lake}/batch=1")
     zorder_layout(union01, cols, f"{lake}/batch=c0-1", bits=5,
                   num_files=1, mode="overwrite", edges=edges)
     dup = fp(spark.read.parquet(f"{lake}/batch=*"))
     assert dup != one_copy                 # the raw glob WOULD dup-read
     # the resolver excludes the uncommitted unit: still exactly one copy
-    assert [os.path.basename(u) for u in resolve_ingest_units(lake)] == [
+    assert [os.path.basename(u) for u in resolve_units(lake)] == [
         "batch=0", "batch=1", "batch=2"
     ]
 
     report = compact_ingest_units(lake, cols, spark, bits=5,
                                   num_files=1, keep_last=1)
-    # repair deleted the marker-less unit, then the retry re-folded the
+    # vacuum deleted the unrecorded unit, then the retry re-folded the
     # same span and committed it, retaining the originals one generation
-    assert report["repaired"] == ["batch=c0-1"]
+    assert report["vacuumed"] == ["batch=c0-1"]
     assert report["folded"] == 2 and report["unit"] == "batch=c0-1"
     assert report["retired"] == ["batch=0", "batch=1"]
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
     names = sorted(n for n in os.listdir(lake) if n.startswith("batch="))
     assert names == ["batch=0", "batch=1", "batch=2", "batch=c0-1"]
 
 
 def test_compact_ingest_units_repairs_nested_crash_ranges(spark, split_sf_dir, tmp_path):
-    """Double-crash state mixing both repair rules: two COMMITTED folds
+    """Double-crash state mixing both vacuum rules: two COMMITTED folds
     (c0-1, then c0-2 whose candidates included c0-1) plus a retained
-    original (batch=1) that a crashed repair sweep never deleted —
-    batch=1 now sits inside TWO committed ranges at once and must be
-    deleted exactly once; c0-1 is contained in c0-2; and a marker-less
-    c0-3 from a third fold that crashed pre-commit must be deleted as
+    original (batch=1) that a crashed vacuum never deleted — batch=1
+    now sits inside TWO committed ranges at once and must be deleted
+    exactly once; c0-1 is contained in c0-2; and an unrecorded c0-3
+    from a third fold that crashed pre-commit must be deleted as
     uncommitted (its span would otherwise swallow the live tail's
-    history). One repair pass converges the lot to one copy."""
+    history). One vacuum converges the lot to one copy."""
     from aind_protein_data_transformation_spark.operators.layout import (
-        _FOLD_MARKER,
+        _COMMIT_RECORD,
         compact_ingest_units,
-        read_ingest_lake,
+        read_units,
     )
 
     lake = str(tmp_path / "lake")
@@ -426,58 +427,58 @@ def test_compact_ingest_units_repairs_nested_crash_ranges(spark, split_sf_dir, t
 
     one_copy = fp(spark.read.parquet(f"{lake}/batch=*"))
 
-    def commit_marker(unit):
-        with open(os.path.join(lake, unit, _FOLD_MARKER), "w") as f:
+    def commit(unit):
+        with open(os.path.join(lake, unit, _COMMIT_RECORD), "w") as f:
             f.write("{}")
 
-    # committed fold 1 over {0, 1}; its NEXT repair deleted batch=0
+    # committed fold 1 over {0, 1}; its NEXT vacuum deleted batch=0
     # then crashed before batch=1 (batch=1 survives in two ranges)
     u01 = spark.read.parquet(f"{lake}/batch=0", f"{lake}/batch=1")
     zorder_layout(u01, cols, f"{lake}/batch=c0-1", bits=5,
                   num_files=1, mode="overwrite", edges=edges)
-    commit_marker("batch=c0-1")
+    commit("batch=c0-1")
     # committed fold 2 over {c0-1, 2}
     u012 = spark.read.parquet(
         f"{lake}/batch=0", f"{lake}/batch=1", f"{lake}/batch=2"
     )
     zorder_layout(u012, cols, f"{lake}/batch=c0-2", bits=5,
                   num_files=1, mode="overwrite", edges=edges)
-    commit_marker("batch=c0-2")
+    commit("batch=c0-2")
     shutil.rmtree(f"{lake}/batch=0")
-    # fold 3 over {c0-2, 3} crashed BEFORE its marker: uncommitted
+    # fold 3 over {c0-2, 3} crashed BEFORE its record: uncommitted
     u0123 = spark.read.parquet(f"{lake}/batch=c0-2", f"{lake}/batch=3")
     zorder_layout(u0123, cols, f"{lake}/batch=c0-3", bits=5,
                   num_files=1, mode="overwrite", edges=edges)
 
     # even in this state the resolver reads exactly one copy
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
 
     report = compact_ingest_units(lake, cols, spark, bits=5,
                                   num_files=1, keep_last=1)
     # one sweep: batch=1 (inside BOTH committed ranges) deleted exactly
     # once, c0-1 (inside c0-2) deleted, uncommitted c0-3 deleted
-    assert report["repaired"] == [
+    assert report["vacuumed"] == [
         "batch=c0-1", "batch=1", "batch=2", "batch=c0-3"
     ]
     assert report["folded"] == 0           # only c0-2 matured: no fold
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
     names = sorted(n for n in os.listdir(lake) if n.startswith("batch="))
     assert names == ["batch=3", "batch=c0-2"]
 
 
 def test_fold_retains_units_for_inflight_readers(spark, split_sf_dir, tmp_path):
     """The fold's one-generation reader grace (VERDICT round 14 #3 —
-    the same retained-generation shape the manifest compact has): a
+    the same retained-generation shape the table compact has): a
     reader that resolved its unit list BEFORE a fold still collects the
-    exact multiset AFTER it, because the promote leaves the subsumed
+    exact multiset AFTER it, because the commit leaves the subsumed
     units in place. The retained generation is reclaimed by the NEXT
-    repair sweep — after which the stale resolution fails LOUDLY
+    vacuum — after which the stale resolution fails LOUDLY
     (missing paths), never silently wrong."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_ingest_units,
-        read_ingest_lake,
-        repair_ingest_units,
-        resolve_ingest_units,
+        read_units,
+        vacuum_units,
+        resolve_units,
         save_edge_snapshot,
     )
 
@@ -502,7 +503,7 @@ def test_fold_retains_units_for_inflight_readers(spark, split_sf_dir, tmp_path):
         ).collect()[0])
 
     # the in-flight reader resolves BEFORE the fold
-    pre_units = resolve_ingest_units(lake)
+    pre_units = resolve_units(lake)
     assert [os.path.basename(u) for u in pre_units] == [
         "batch=0", "batch=1", "batch=2", "batch=3"
     ]
@@ -515,13 +516,13 @@ def test_fold_retains_units_for_inflight_readers(spark, split_sf_dir, tmp_path):
     # grace: the pre-fold resolution still collects correctly
     assert fp(spark.read.parquet(*pre_units)) == one_copy
     # and a fresh resolution sees exactly one copy (no double count)
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
 
-    # explicit reclaim (the cheap repair-only entry point): deletes
+    # explicit reclaim (the cheap vacuum-only entry point): deletes
     # exactly the retired generation, resolver unaffected
-    dead = repair_ingest_units(lake)
+    dead = vacuum_units(lake)
     assert sorted(dead) == ["batch=0", "batch=1", "batch=2"]
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
     # the stale pre-fold resolution now fails loudly, never silently
     # (the reported missing unit is whichever path Spark checks first)
     with pytest.raises(Exception, match=r"batch=\d"):
@@ -531,7 +532,7 @@ def test_fold_retains_units_for_inflight_readers(spark, split_sf_dir, tmp_path):
 def test_fold_keep_last_zero_raises(spark, tmp_path):
     """keep_last=0 would let the fold swallow the newest (possibly
     partially-landed) batch unit; an at-least-once replay of that id
-    would then be deleted by repair as 'contained' — permanent row
+    would then be deleted by vacuum as 'contained' — permanent row
     loss. The fold refuses up front (ADVICE round 14)."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_ingest_units,
@@ -545,14 +546,13 @@ def test_fold_keep_last_zero_raises(spark, tmp_path):
 def test_fold_gate_failure_keeps_staging_for_inspection(
     spark, split_sf_dir, tmp_path, monkeypatch
 ):
-    """A fingerprint-gate failure renames the staging to
-    ``.fold_failed`` so a routine retry's repair sweep (which deletes
-    any stale ``.fold_tmp``) cannot clobber the inspection copy
-    (ADVICE round 14). The retry itself succeeds and leaves the
-    evidence in place."""
+    """A fingerprint-gate failure renames the written (unrecorded) unit
+    to ``.fold_failed`` so a routine retry's vacuum (which deletes any
+    unrecorded fold) cannot clobber the inspection copy (ADVICE round
+    14). The retry itself succeeds and leaves the evidence in place."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_ingest_units,
-        read_ingest_lake,
+        read_units,
         save_edge_snapshot,
     )
 
@@ -576,9 +576,9 @@ def test_fold_gate_failure_keeps_staging_for_inspection(
                   .cast("decimal(38,0)")),
         ).collect()[0])
 
-    one_copy = fp(read_ingest_lake(spark, lake))
+    one_copy = fp(read_units(spark, lake))
 
-    # first fingerprint call (the staging side) lies once -> gate trips
+    # first fingerprint call (the new unit's side) lies once -> gate trips
     real_fp = layout_mod._multiset_fingerprint
     calls = {"n": 0}
 
@@ -592,17 +592,17 @@ def test_fold_gate_failure_keeps_staging_for_inspection(
         compact_ingest_units(lake, cols, spark, bits=5,
                              num_files=1, keep_last=1)
     assert os.path.isdir(os.path.join(lake, ".fold_failed"))
-    assert not os.path.exists(os.path.join(lake, ".fold_tmp"))
+    assert not os.path.exists(os.path.join(lake, "batch=c0-1"))
     # originals untouched: the lake still reads one exact copy
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
 
     # routine retry (fingerprint honest now): fold succeeds AND the
-    # failure evidence survives its repair sweep
+    # failure evidence survives its vacuum
     report = compact_ingest_units(lake, cols, spark, bits=5,
                                   num_files=1, keep_last=1)
     assert report["folded"] == 2 and report["unit"] == "batch=c0-1"
     assert os.path.isdir(os.path.join(lake, ".fold_failed"))
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
 
 
 def _mini_lake(spark, split_sf_dir, tmp_path, n=3):
@@ -639,53 +639,69 @@ def _mini_lake(spark, split_sf_dir, tmp_path, n=3):
 def test_repair_reports_only_confirmed_deletes(
     spark, split_sf_dir, tmp_path, monkeypatch
 ):
-    """``repair_ingest_units`` post-checks every delete with ``_exists``
-    and returns only the units CONFIRMED gone (ADVICE round 15):
-    ``_delete_tree`` is best-effort, so a silently failed delete must
-    not be reported as reclaimed storage — callers doing a raw glob or
-    footer walk would otherwise trust a double-counting lake."""
+    """``vacuum_units`` post-checks every delete with ``_exists`` and
+    returns only the units CONFIRMED gone (ADVICE round 15), on both
+    stores — a folded lake's retained originals and a compacted table's
+    retained version: ``_delete_tree`` is best-effort, so a silently
+    failed delete must not be reported as reclaimed storage — callers
+    doing a raw glob or footer walk would otherwise trust a
+    double-counting store."""
     from aind_protein_data_transformation_spark.operators.layout import (
+        compact_clustered_table,
         compact_ingest_units,
-        repair_ingest_units,
+        vacuum_units,
     )
 
     lake, cols, fp = _mini_lake(spark, split_sf_dir, tmp_path, n=3)
     compact_ingest_units(lake, cols, spark, bits=5, num_files=1,
                          keep_last=1)   # retires batch=0, batch=1
+    table = str(tmp_path / "table")
+    zorder_layout(load_table(spark, split_sf_dir, "events"), cols, table,
+                  bits=5, num_files=1)
+    for _ in range(2):                  # retires _versions/v_000001
+        compact_clustered_table(table, cols, bits=5, num_files=1,
+                                spark=spark)
 
     real_delete = layout_mod._delete_tree
 
-    def skip_batch0(p, spark_):
-        if os.path.basename(p) == "batch=0":
-            return   # the silent failure: rmtree(ignore_errors=True)
-        real_delete(p, spark_)
+    def skip(names):
+        def delete(p, spark_):
+            if os.path.basename(p) in names:
+                return   # the silent failure: rmtree(ignore_errors=True)
+            real_delete(p, spark_)
+        return delete
 
-    monkeypatch.setattr(layout_mod, "_delete_tree", skip_batch0)
-    dead = repair_ingest_units(lake, spark)
+    monkeypatch.setattr(layout_mod, "_delete_tree", skip({"batch=0"}))
+    dead = vacuum_units(lake, spark)
     assert dead == ["batch=1"]          # batch=0 attempted, NOT confirmed
     assert os.path.isdir(os.path.join(lake, "batch=0"))
+    monkeypatch.setattr(layout_mod, "_delete_tree", skip({"v_000001"}))
+    assert vacuum_units(table, spark) == []
+    assert os.path.isdir(os.path.join(table, "_versions", "v_000001"))
 
-    # once the store behaves, a plain retry reclaims the survivor
+    # once the store behaves, a plain retry reclaims the survivors
     monkeypatch.setattr(layout_mod, "_delete_tree", real_delete)
-    assert repair_ingest_units(lake, spark) == ["batch=0"]
+    assert vacuum_units(lake, spark) == ["batch=0"]
+    assert vacuum_units(table, spark) == ["_versions/v_000001"]
 
 
 def test_fold_refuses_to_refold_surviving_dead_unit(
     spark, split_sf_dir, tmp_path, monkeypatch
 ):
-    """A retired unit whose repair delete silently failed must NEVER
+    """A retired unit whose vacuum delete silently failed must NEVER
     re-enter the fold's candidate set (ADVICE round 15, medium): its
     rows would double-count into the folded unit AND pass the
-    fingerprint gate (staging is compared against the same duplicated
-    union). The fold re-lists after repair and raises on any survivor,
-    writing nothing; the resolver keeps reading exactly one copy."""
+    fingerprint gate (the new unit is compared against the same
+    duplicated union). The fold re-lists after its vacuum and raises on
+    any survivor, writing nothing; the resolver keeps reading exactly
+    one copy."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_ingest_units,
-        read_ingest_lake,
+        read_units,
     )
 
     lake, cols, fp = _mini_lake(spark, split_sf_dir, tmp_path, n=4)
-    one_copy = fp(read_ingest_lake(spark, lake))
+    one_copy = fp(read_units(spark, lake))
     compact_ingest_units(lake, cols, spark, bits=5, num_files=1,
                          keep_last=1)   # c0-2 committed; 0..2 retired
 
@@ -693,15 +709,14 @@ def test_fold_refuses_to_refold_surviving_dead_unit(
         return   # every delete silently fails
 
     monkeypatch.setattr(layout_mod, "_delete_tree", silent_noop)
-    with pytest.raises(RuntimeError, match="repair left dead ingest"):
+    with pytest.raises(RuntimeError, match="vacuum left dead units"):
         compact_ingest_units(lake, cols, spark, bits=5, num_files=1,
                              keep_last=1)
     # nothing was folded or staged; one exact copy through the resolver
     names = sorted(n for n in os.listdir(lake) if n.startswith("batch="))
     assert names == ["batch=0", "batch=1", "batch=2", "batch=3",
                      "batch=c0-2"]
-    assert not os.path.exists(os.path.join(lake, ".fold_tmp"))
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
 
 
 def test_fold_gate_secondary_failure_raises_original(
@@ -709,16 +724,16 @@ def test_fold_gate_secondary_failure_raises_original(
 ):
     """If the fingerprint gate trips AND the evidence-preserving move
     to ``.fold_failed`` itself fails, the ORIGINAL multiset diagnostic
-    still raises — noting that the staging stayed put and the next
-    repair sweep will delete it (ADVICE round 15: the secondary OSError
+    still raises — noting that the unrecorded unit stayed put and the
+    next vacuum will delete it (ADVICE round 15: the secondary OSError
     must not mask the RuntimeError)."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_ingest_units,
-        read_ingest_lake,
+        read_units,
     )
 
     lake, cols, fp = _mini_lake(spark, split_sf_dir, tmp_path, n=3)
-    one_copy = fp(read_ingest_lake(spark, lake))
+    one_copy = fp(read_units(spark, lake))
 
     real_fp = layout_mod._multiset_fingerprint
     calls = {"n": 0}
@@ -736,65 +751,57 @@ def test_fold_gate_secondary_failure_raises_original(
                        match="changed the row multiset.*FAILED"):
         compact_ingest_units(lake, cols, spark, bits=5, num_files=1,
                              keep_last=1)
-    # staging stayed where it was written; originals untouched
-    assert os.path.isdir(os.path.join(lake, ".fold_tmp"))
+    # the unit stayed where it was written, unrecorded (so never read);
+    # originals untouched
+    assert os.path.isdir(os.path.join(lake, "batch=c0-1"))
     assert not os.path.exists(os.path.join(lake, ".fold_failed"))
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
 
 
 def test_fold_promote_direct_no_rename(
     spark, split_sf_dir, tmp_path, monkeypatch
 ):
-    """``promote="direct"`` writes the folded unit STRAIGHT to its
-    final ``batch=c<lo>-<hi>`` name — zero renames, so zero per-object
-    copies on S3-class stores (VERDICT round 15 #3: the fold's last
-    object-store boundary closed as a choice). The marker is still the
-    commit point: mid-write the unit is marker-less and invisible to
-    the resolver, a pre-marker crash is repaired losslessly, and the
-    committed result is observation-identical to the rename regime."""
+    """The fold writes its unit STRAIGHT to the final
+    ``batch=c<lo>-<hi>`` name — zero renames, so zero per-object copies
+    on S3-class stores. The record is the commit point: mid-write the
+    unit is unrecorded and invisible to the resolver, a pre-record
+    crash is vacuumed losslessly, and the retry converges to the same
+    committed unit."""
     from aind_protein_data_transformation_spark.operators.layout import (
-        _FOLD_MARKER,
+        _COMMIT_RECORD,
         compact_ingest_units,
-        read_ingest_lake,
-        resolve_ingest_units,
+        read_units,
+        resolve_units,
     )
 
     lake, cols, fp = _mini_lake(spark, split_sf_dir, tmp_path, n=4)
-    one_copy = fp(read_ingest_lake(spark, lake))
+    one_copy = fp(read_units(spark, lake))
 
     def no_renames(src, dst, spark_):
-        raise AssertionError(f"direct promote must not rename ({src})")
+        raise AssertionError(f"the fold must not rename ({src})")
 
     monkeypatch.setattr(layout_mod, "_rename", no_renames)
     report = compact_ingest_units(lake, cols, spark, bits=5,
-                                  num_files=1, keep_last=1,
-                                  promote="direct")
+                                  num_files=1, keep_last=1)
     assert report["folded"] == 3 and report["unit"] == "batch=c0-2"
     assert report["retired"] == ["batch=0", "batch=1", "batch=2"]
     assert os.path.isfile(
-        os.path.join(lake, "batch=c0-2", _FOLD_MARKER)
+        os.path.join(lake, "batch=c0-2", _COMMIT_RECORD)
     )
-    assert not os.path.exists(os.path.join(lake, ".fold_tmp"))
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
-    monkeypatch.undo()
+    assert fp(read_units(spark, lake)) == one_copy
 
-    # pre-marker crash in the direct regime: the final-named unit exists
-    # but is uncommitted — resolver-invisible, repaired, retry converges
-    os.remove(os.path.join(lake, "batch=c0-2", _FOLD_MARKER))
-    assert [os.path.basename(u) for u in resolve_ingest_units(lake)] == [
+    # pre-record crash: the final-named unit exists but is unrecorded —
+    # resolver-invisible, vacuumed, retry converges
+    os.remove(os.path.join(lake, "batch=c0-2", _COMMIT_RECORD))
+    assert [os.path.basename(u) for u in resolve_units(lake)] == [
         "batch=0", "batch=1", "batch=2", "batch=3"
     ]
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
+    assert fp(read_units(spark, lake)) == one_copy
     report2 = compact_ingest_units(lake, cols, spark, bits=5,
-                                   num_files=1, keep_last=1,
-                                   promote="direct")
-    assert report2["repaired"] == ["batch=c0-2"]
+                                   num_files=1, keep_last=1)
+    assert report2["vacuumed"] == ["batch=c0-2"]
     assert report2["folded"] == 3 and report2["unit"] == "batch=c0-2"
-    assert fp(read_ingest_lake(spark, lake)) == one_copy
-
-    with pytest.raises(ValueError, match="promote must be"):
-        compact_ingest_units(lake, cols, spark, keep_last=1,
-                             promote="pointer")
+    assert fp(read_units(spark, lake)) == one_copy
 
 
 def test_ingest_lifecycle_end_to_end(spark, split_sf_dir, tmp_path):
@@ -808,7 +815,7 @@ def test_ingest_lifecycle_end_to_end(spark, split_sf_dir, tmp_path):
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_ingest_units,
         load_edge_snapshot,
-        read_ingest_lake,
+        read_units,
         save_edge_snapshot,
     )
 
@@ -877,5 +884,5 @@ def test_ingest_lifecycle_end_to_end(spark, split_sf_dir, tmp_path):
         )
 
     source = load_table(spark, split_sf_dir, "events")
-    landed = read_ingest_lake(spark, lake).select(*source.columns)
+    landed = read_units(spark, lake).select(*source.columns)
     assert box_agg(landed) == box_agg(source)
